@@ -23,9 +23,11 @@ import org.apache.spark.sql.DataFrame
 object CacheReaper {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Registry capacity (r08, VERDICT r07 #4). The bench/verify surface
-    * registers ~6 long-lived caches per full pass, so 64 is an order of
-    * magnitude of headroom — but a long INTERACTIVE session mixing many
+  /** Registry capacity (r08, VERDICT r07 #4). Measured demand (the
+    * perfbench trace's `cache.tracked_refs`): 6 tracked refs per
+    * `llm_shared_frames` pass, and up to 37 in one pass of all 20
+    * shared-frame keys, so 64 holds a full shared-frame pass with under
+    * 2× headroom. A long INTERACTIVE session mixing many
     * operators without ever calling [[release]] would previously grow the
     * registry (and hold strong refs pinning every cached plan) without
     * bound. Past capacity the OLDEST entry is unpersisted and dropped,

@@ -149,12 +149,11 @@ object Formats {
     // a fresh session re-registers the existing files with CLUSTERED BY
     // DDL instead of rewriting them, so only the first-ever invocation
     // pays the write.
-    // cache key covers the INPUT DATA (size + mtime), not just the path:
-    // regenerated testdata must never be served stale bucketed copies
-    def sig(name: String): String = {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      s"${f.length}_${f.lastModified}"
-    }
+    // cache key covers the INPUT DATA (size + mtime + content token), not
+    // just the path: regenerated testdata — or a part file rewritten in
+    // place inside a directory input — must never be served stale
+    // bucketed copies
+    def sig(name: String): String = Tables.inputKey(s"$dir/$name.parquet")
     val key = math.abs((dir + sig("orders") + sig("lineitem")).hashCode)
     // cacheRoot, not java.io.tmpdir: the per-PID run dir (FastScratch r05)
     // would defeat the cross-run amortization these copies exist for

@@ -50,6 +50,38 @@ object StreamingOps {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Drain `stream` into a parquet sink with one `AvailableNow` run under
+    * [[withStatePartitions]], then read the sink back. Every micro-batch
+    * is written through foreachBatch: appended in append/update mode,
+    * overwritten in complete mode (which re-emits the whole result each
+    * batch).
+    *
+    * The write is unconditional (r08): `isEmpty` executed the batch plan
+    * once and the guarded write re-executed it — inside foreachBatch each
+    * action re-runs the micro-batch plan (state reads included), so the
+    * EMITTING batch paid its state flush twice (StreamProbe: no-data
+    * finalization batch ~2x). An empty write costs one empty part file and
+    * also guarantees the sink dir exists even when nothing is emitted.
+    *
+    * The read-back passes the stream's own schema — the schema every batch
+    * was written with — so no Spark job infers it from the part files. */
+  private def drainToParquet(s: SparkSession, key: String, stream: DataFrame,
+                             outputMode: String): DataFrame = {
+    val target = java.nio.file.Files.createTempDirectory(s"${key}_sink").toString + "/out"
+    val writeMode = if (outputMode == "complete") "overwrite" else "append"
+    withStatePartitions(s, 2) {
+      stream.writeStream
+        .outputMode(outputMode)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode(writeMode).parquet(target)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    s.read.schema(stream.schema).parquet(target)
+  }
+
   // --- q39: tumbling 1 h window counts ------------------------------------
   private val q39 = QueryDef(
     "q39_stream_tumbling",
@@ -123,10 +155,11 @@ object StreamingOps {
   // HOW it duplicates changed in r17 (VERDICT r16 #2): the r04 shape was
   // `def src; src.union(src)` — `def` built TWO FileStreamSource
   // instances, each with its own directory listing, offset-log entry and
-  // getBatch scan per micro-batch. Q42SourceProbe A/B'd three shapes at
-  // sf0.1 (interleaved, 4 reps, same window): two-source union 3.36 s
-  // median / one-source self-union 3.52 s / in-plan explode duplication
-  // 3.03 s, identical output rows — explode won every rep. One source +
+  // getBatch scan per micro-batch. The r17 A/B (ROUND17.md) ran three
+  // shapes at sf0.1 (interleaved, 4 reps, same window): two-source union
+  // 3.36 s median / one-source self-union 3.52 s / in-plan explode
+  // duplication 3.03 s, identical output rows — explode won every rep.
+  // One source +
   // explode(array(0,1)) keeps the every-event-arrives-twice property
   // feeding the dedup while halving source bookkeeping; at 100 TB the
   // same change halves the listing/offset I/O of an at-least-once
@@ -158,25 +191,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    val target = java.nio.file.Files.createTempDirectory("q42_sink").toString
-    withStatePartitions(s, 2) {
-      val query = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("wstart", "event_type")
+    drainToParquet(s, "q42", stream, "append").orderBy("wstart", "event_type")
   }
 
   // --- q53: custom streaming state via flatMapGroupsWithState -------------
@@ -210,26 +225,7 @@ object StreamingOps {
     // foreachBatch parquet sink (not memory): update-mode emissions append
     // per batch — at 100 TB the driver never materializes the result; here
     // the single static batch yields exactly one row per user.
-    val target = java.nio.file.Files.createTempDirectory("q53_sink").toString
-    withStatePartitions(s, 2) {
-      val query = perUser.toDF("user_id", "n_events", "last_us")
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out")
+    drainToParquet(s, "q53", perUser.toDF("user_id", "n_events", "last_us"), "update")
       .select(col("user_id"), col("n_events"),
         timestamp_micros(col("last_us")).as("last_ts"))
       .orderBy("user_id")
@@ -262,25 +258,7 @@ object StreamingOps {
         && col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR")
         && col("v_ts") < col("p_ts"))
       .select(col("p_event_id").as("purchase_id"), col("v_event_id").as("view_id"))
-    val target = java.nio.file.Files.createTempDirectory("q56_sink").toString
-    withStatePartitions(s, 2) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("purchase_id", "view_id").limit(500)
+    drainToParquet(s, "q56", joined, "append").orderBy("purchase_id", "view_id").limit(500)
   }
 
   // --- q61: foreachBatch sink --------------------------------------------
@@ -299,22 +277,11 @@ object StreamingOps {
     "q61_stream_foreachbatch",
     """SELECT date_trunc('hour', ts) AS wstart, event_type, COUNT(*) AS n
       |FROM events GROUP BY 1, 2 ORDER BY wstart, event_type""".stripMargin) { (s, dir) =>
-    val target = java.nio.file.Files.createTempDirectory("q61_sink").toString
     val agg = Tables.eventsStream(s, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    withStatePartitions(s, 2) {
-      val query = agg.writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("wstart", "event_type")
+    drainToParquet(s, "q61", agg, "complete").orderBy("wstart", "event_type")
   }
 
   // --- q73: stream-static enrichment join ---------------------------------
@@ -412,25 +379,7 @@ object StreamingOps {
       "leftOuter")
       .select(col("p_event_id").as("purchase_id"),
         coalesce(col("v_event_id"), lit(-1L)).as("view_id"))
-    val target = java.nio.file.Files.createTempDirectory("q93_sink").toString
-    withStatePartitions(s, 2) {
-      val query = joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("purchase_id", "view_id").limit(500)
+    drainToParquet(s, "q93", joined, "append").orderBy("purchase_id", "view_id").limit(500)
   }
 
   // --- q82: time-series resample to an hourly grid + forward fill ---------
@@ -508,25 +457,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("session_start"),
         col("user_id"), col("n_events"))
-    val target = java.nio.file.Files.createTempDirectory("q85_sink").toString
-    withStatePartitions(s, 2) {
-      val query = sessions.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("user_id", "session_start")
+    drainToParquet(s, "q85", sessions, "append").orderBy("user_id", "session_start")
   }
 
   // --- q94: per-event session-relative features ---------------------------
@@ -656,26 +587,8 @@ object StreamingOps {
             Iterator((minId, fp, n))
           }
       }
-    val target = java.nio.file.Files.createTempDirectory("q104_sink").toString
-    withStatePartitions(s, 2) {
-      val query = deduped.toDF("doc_id", "fingerprint", "n_claims")
-        .writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("doc_id").limit(500)
+    drainToParquet(s, "q104", deduped.toDF("doc_id", "fingerprint", "n_claims"), "update")
+      .orderBy("doc_id").limit(500)
   }
 
   // --- q105: TRUE streaming sliding windows (1 h window, 30 min slide) ----
@@ -701,25 +614,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-    val target = java.nio.file.Files.createTempDirectory("q105_sink").toString
-    withStatePartitions(s, 2) {
-      val query = windows.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Unconditional write (r08): `isEmpty` executed the batch plan
-          // once and the guarded write re-executed it — inside foreachBatch
-          // each action re-runs the micro-batch plan (state reads
-          // included), so the EMITTING batch paid its state flush twice
-          // (StreamProbe: no-data finalization batch ~2x). An empty append
-          // write costs one empty part file and also guarantees the sink
-          // dir exists even when nothing is emitted.
-          batch.write.mode("append").parquet(s"$target/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.read.parquet(s"$target/out").orderBy("wstart", "event_type")
+    drainToParquet(s, "q105", windows, "append").orderBy("wstart", "event_type")
   }
 
   def defs: Seq[QueryDef] =

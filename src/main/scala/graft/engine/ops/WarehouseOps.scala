@@ -294,13 +294,14 @@ object WarehouseOps {
     // bucketed copies, the stored aggregate IS pre-existing state in the
     // scenario being modeled, so it lives at a deterministic per-input
     // path and only the first-ever invocation pays the history
-    // aggregation. The key embeds the RAW size/mtime values plus the sf
-    // name (r05, ADVICE r04: a truncated 32-bit hashCode could collide
-    // after testdata regeneration and silently serve a stale aggregate —
-    // the raw values cannot).
-    val f = new java.io.File(s"$dir/orders.parquet")
+    // aggregation. The key embeds the RAW size/mtime values and content
+    // token plus the sf name (r05, ADVICE r04: a truncated 32-bit
+    // hashCode could collide after testdata regeneration and silently
+    // serve a stale aggregate — the raw values cannot; the content token
+    // catches an in-place part-file rewrite inside a directory input,
+    // which moves neither the directory's size nor its mtime).
     val sfName = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val key = s"${sfName}_${f.length}_${f.lastModified}"
+    val key = s"${sfName}_${Tables.inputKey(s"$dir/orders.parquet")}"
     val stored = s"${graft.engine.FastScratch.cacheRoot}/graft_matview_$key"
     if (!new java.io.File(s"$stored/_SUCCESS").exists())
       aggOf(orders.where(col("o_orderkey") % 10 =!= 7))
@@ -355,12 +356,12 @@ object WarehouseOps {
     * [[layoutPartitions]]) at ~128 MB per output file, floored at the
     * legacy 8 so the local layout (and the bench number) is unchanged
     * while the width grows with the data — the bytes-per-file rule a
-    * production OPTIMIZE ZORDER rewrite applies. A cores-based floor was A/B-measured and
-    * REJECTED (tools/Q122Probe, interleaved, 5/5 reps): 32 range
-    * partitions read +0.5–1.2 s/run slower locally — the single-row-
-    * group testdata gives the exchange a 1-task map side, so extra
-    * reducers only add range-sampling volume and per-file write/footer
-    * overhead. The oracle's probed octant is (max−min)/8 of the z
+    * production OPTIMIZE ZORDER rewrite applies. A cores-based floor was
+    * A/B-measured and REJECTED (r17, OPTIMIZATION_r17.md, interleaved, 5/5
+    * reps): 32 range partitions read +0.5–1.2 s/run slower locally —
+    * the single-row-group testdata gives the exchange a 1-task map side,
+    * so extra reducers only add range-sampling volume and per-file
+    * write/footer overhead. The oracle's probed octant is (max−min)/8 of the z
     * DOMAIN, independent of the file count, and the per-file
     * disjoint-z-range property (SinkRoundtripSpec) holds for any range
     * partitioning, so results are bit-identical at any width. */
@@ -385,21 +386,30 @@ object WarehouseOps {
     math.min(Int.MaxValue.toDouble, math.max(floor.toDouble, est)).toInt
   }
 
+  /** Bytes under an input path: the file's length, or the summed
+    * lengths of every file below a directory (`File.length` of a
+    * directory is its inode size, ~4 KB, whatever it holds). */
+  private[graft] def inputBytes(path: String,
+                                conf: org.apache.hadoop.conf.Configuration): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(conf).getContentSummary(p).getLength
+  }
+
   def zorderWrite(s: SparkSession, dir: String): String = {
     val tmp = Files.createTempDirectory("q122_zorder").toString
     val src = Tables.table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"), col("l_quantity"),
         expr(zorderSql("l_partkey", "l_suppkey", 20, forSpark = true)).as("zval"))
-    // Input bytes from the file itself (ground truth), not optimizer
+    // Input bytes from the files themselves (ground truth), not optimizer
     // stats on the projected plan — see layoutPartitions. The projection
     // ratio is MEASURED on this exact rewrite at sf0.1 (r18): the written
     // layout (5 projected columns + zval, re-sorted by zval) is 0.714× the
     // 11-column input parquet bytes; 0.75 keeps a margin toward MORE
     // files (slightly-under-target files cost less than oversized ones).
-    val inputBytes = new java.io.File(s"$dir/lineitem.parquet").length()
-    val parts = layoutPartitions(inputBytes, projectionRatio = 0.75,
-      targetFileBytes = 128L << 20, floor = 8)
+    val parts = layoutPartitions(
+      inputBytes(s"$dir/lineitem.parquet", s.sparkContext.hadoopConfiguration),
+      projectionRatio = 0.75, targetFileBytes = 128L << 20, floor = 8)
     src.repartitionByRange(parts, col("zval"))
       .sortWithinPartitions("zval")
       .write.mode("overwrite").parquet(tmp)

@@ -322,4 +322,153 @@ class SchemaDriftSpec extends SparkTestBase {
       "the loader must have pinned the flag on the divergent session — " +
         "that pin is WHY the global cache is session-safe")
   }
+
+  // --- Driver-side footer resolution -------------------------------------
+  // A single-file table's schema is read from its footer on the driver and
+  // converted with Spark's own footer converter; Spark's inference would
+  // start a one-task job per cold table. The result must be exactly what
+  // inference returns, under every conversion setting inference honors.
+
+  private def inferred(session: org.apache.spark.sql.SparkSession,
+                       path: String): Either[String, StructType] =
+    scala.util.Try(session.read.parquet(path).schema).toEither.left.map(_.getMessage)
+
+  private def footerResolved(session: org.apache.spark.sql.SparkSession,
+                             path: String): Either[String, StructType] =
+    scala.util.Try(Tables.resolveSchema(session, path)).toEither.left.map(_.getMessage)
+
+  /** Write `rows` with parquet-hadoop's example writer: a file without
+    * Spark's row-metadata key, so the converter decides every type. */
+  private def writeExample(schemaText: String)(
+      rows: (org.apache.parquet.example.data.simple.SimpleGroupFactory =>
+        Seq[org.apache.parquet.example.data.Group])): String = {
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schemaText)
+    val path = fixtureDir().resolve("example.parquet")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path.toUri))
+      .withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try rows(new SimpleGroupFactory(schema)).foreach(writer.write)
+    finally writer.close()
+    path.toString
+  }
+
+  /** Parity under every value of one conf, on fresh sessions: the footer
+    * path and Spark's inference either yield equal schemas or fail with
+    * the same message. Returns the schemas per conf value. */
+  private def parityUnder(path: String, conf: String,
+                          values: Seq[String]): Map[String, Either[String, StructType]] =
+    values.map { v =>
+      val session = spark.newSession()
+      session.conf.set(conf, v)
+      val expected = inferred(session, path)
+      assert(footerResolved(session, path) === expected, s"$conf=$v")
+      v -> expected
+    }.toMap
+
+  test("footer schema equals Spark's inferred schema for every testdata table") {
+    val testdata = new java.io.File(sfDir).getParent
+    for (sf <- Seq("sf0.001", "sf0.01"); t <- Tables.all) {
+      val path = s"$testdata/$sf/$t.parquet"
+      for (nanos <- Seq("true", "false")) {
+        val session = spark.newSession()
+        session.conf.set("spark.sql.legacy.parquet.nanosAsLong", nanos)
+        assert(footerResolved(session, path) === inferred(session, path),
+          s"$sf/$t nanosAsLong=$nanos")
+      }
+    }
+  }
+
+  test("footer schema equals inference on a Spark-written file (row-metadata key)") {
+    // Spark records its own schema in the footer's key-value metadata; the
+    // footer path must take it (field metadata, non-nullable columns, nested
+    // types) and relax nullability exactly as a file relation does.
+    val dir = fixtureDir()
+    val df = spark.sql(
+      """SELECT id, CAST(id AS INT) AS i, named_struct('a', id, 'b', 'x') AS st,
+        |  array(id, id + 1) AS arr, map('k', id) AS m,
+        |  CAST(id AS DECIMAL(12, 2)) AS dec, CAST(timestamp_micros(id) AS TIMESTAMP_NTZ) AS ntz
+        |FROM range(10)""".stripMargin)
+    val tagged = df.withColumn("i", col("i").as("i",
+      new MetadataBuilder().putString("comment", "tagged").build()))
+    assert(!tagged.schema("id").nullable, "fixture must carry a non-nullable column")
+    writeSingleFile(tagged, dir, "fixture")
+    val path = dir.resolve("fixture.parquet").toString
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+    val kv = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      finally reader.close()
+    assert(kv.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    val expected = inferred(spark, path)
+    assert(footerResolved(spark, path) === expected)
+    assert(expected.toOption.get("i").metadata.getString("comment") === "tagged")
+    assert(expected.toOption.get.forall(_.nullable))
+  }
+
+  test("footer schema equals inference on TIMESTAMP(NANOS) under both nanosAsLong values") {
+    val path = writeExample(
+      """message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true));
+        |  optional int64 ts_local (TIMESTAMP(NANOS,false)); }""".stripMargin) { f =>
+      (0 until 5).map(i => f.newGroup().append("id", i.toLong)
+        .append("ts", 1700000000000000000L + i).append("ts_local", 1700000000000000000L + i))
+    }
+    val byValue = parityUnder(path, "spark.sql.legacy.parquet.nanosAsLong", Seq("true", "false"))
+    assert(byValue("true").toOption.get("ts").dataType === LongType)
+  }
+
+  test("footer schema equals inference on INT96 and binary columns under their confs") {
+    val path = writeExample(
+      "message m { required int96 t; optional binary b; optional binary s (UTF8); }") { f =>
+      (0 until 5).map(i => f.newGroup()
+        .append("t", org.apache.parquet.io.api.Binary.fromConstantByteArray(Array.fill(12)(i.toByte)))
+        .append("b", s"b$i").append("s", s"s$i"))
+    }
+    val int96 = parityUnder(path, "spark.sql.parquet.int96AsTimestamp", Seq("true", "false"))
+    assert(int96("true").toOption.get("t").dataType === TimestampType)
+    val binary = parityUnder(path, "spark.sql.parquet.binaryAsString", Seq("true", "false"))
+    assert(binary("true").toOption.get("b").dataType === StringType)
+    assert(binary("false").toOption.get("b").dataType === BinaryType)
+    parityUnder(path, "spark.sql.parquet.inferTimestampNTZ.enabled", Seq("true", "false"))
+  }
+
+  test("a cold single-file Tables.table or tableStream starts no Spark job") {
+    val dir = fixtureDir()
+    writeSingleFile(baseEvents, dir, "events")
+    Tables.clearSchemaCache()
+    val infers = Tables.schemaInfersTotal.get()
+    val (_, batchJobs) = JobStarts.during(spark)(Tables.table(spark, dir.toString, "events"))
+    assert(Tables.schemaInfersTotal.get() === infers + 1, "the load must have been cold")
+    assert(batchJobs.isEmpty, s"cold Tables.table started ${batchJobs.size} job(s)")
+    Tables.clearSchemaCache()
+    val (_, streamJobs) =
+      JobStarts.during(spark)(Tables.tableStream(spark, dir.toString, "events"))
+    assert(Tables.schemaInfersTotal.get() === infers + 2, "the load must have been cold")
+    assert(streamJobs.isEmpty, s"cold Tables.tableStream started ${streamJobs.size} job(s)")
+  }
+
+  test("an in-place part-file rewrite inside a directory input changes its cache key") {
+    // q52's bucketed copies and q121's stored aggregate are keyed on
+    // Tables.inputKey. A part file rewritten in place moves neither the
+    // directory's length nor its mtime (forced back here), so only the
+    // listing token can notice.
+    val dir = fixtureDir()
+    val tablePath = dir.resolve("orders.parquet")
+    baseEvents.repartition(2).write.parquet(tablePath.toString)
+    val dirFile = tablePath.toFile
+    val (m0, len0) = (dirFile.lastModified(), dirFile.length())
+    val before = Tables.inputKey(tablePath.toString)
+    assert(Tables.inputKey(tablePath.toString) === before, "the key must be stable")
+    val part = dirFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    writeSingleFile(baseEvents.limit(7), dir, "replacement")
+    Files.move(dir.resolve("replacement.parquet"), part.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(dirFile.setLastModified(m0), "could not force the mtime collision")
+    assert(dirFile.length() === len0 && dirFile.lastModified() === m0)
+    assert(Tables.inputKey(tablePath.toString) !== before,
+      "an in-place part-file rewrite left the directory's cache key unchanged")
+  }
 }

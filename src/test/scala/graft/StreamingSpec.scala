@@ -296,4 +296,42 @@ class StreamingSpec extends SparkTestBase {
     assert(hour0 == Seq(1L),
       s"hour-0 window should emit once with the on-time event only, got $hour0")
   }
+
+  test("parquet-sink keys read their sink back unchanged and start no job after the stream") {
+    // The eight foreachBatch→parquet keys read the sink back with the
+    // stream's own schema instead of inferring it. Against the inferred
+    // read-back of the same sink files, followed by the key's own final
+    // ordering/projection, rows and schema must be identical. Every job the
+    // builder starts must belong to its streaming query: the cold table
+    // schema and the sink schema both resolve without one.
+    import org.apache.spark.sql.DataFrame
+    val byStart = (c: Seq[String]) => (df: DataFrame) => df.orderBy(c.map(col): _*)
+    val top500 = (c: Seq[String]) => (df: DataFrame) => df.orderBy(c.map(col): _*).limit(500)
+    val finish: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "q42_stream_watermark_dedup" -> byStart(Seq("wstart", "event_type")),
+      "q53_stream_stateful" -> ((df: DataFrame) => df.select(col("user_id"),
+        col("n_events"), timestamp_micros(col("last_us")).as("last_ts")).orderBy("user_id")),
+      "q56_stream_interval_join" -> top500(Seq("purchase_id", "view_id")),
+      "q61_stream_foreachbatch" -> byStart(Seq("wstart", "event_type")),
+      "q85_stream_session_native" -> byStart(Seq("user_id", "session_start")),
+      "q93_stream_outer_interval_join" -> top500(Seq("purchase_id", "view_id")),
+      "q104_stream_incremental_dedup" -> top500(Seq("doc_id")),
+      "q105_stream_sliding" -> byStart(Seq("wstart", "event_type")))
+    for ((key, fin) <- finish) {
+      graft.engine.Tables.clearSchemaCache()
+      val (result, jobs) = JobStarts.during(spark)(SparkEntry.queries(key)(spark, sfDir))
+      val outside = jobs.filterNot(JobStarts.fromStream)
+      assert(jobs.nonEmpty, s"$key: the stream ran no job")
+      assert(outside.isEmpty,
+        s"$key started ${outside.size} job(s) outside its streaming query")
+      val sinkDirs = result.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent)
+        .distinct
+      assert(sinkDirs.length === 1, s"$key reads ${sinkDirs.mkString(", ")}")
+      val expected = fin(spark.read.parquet(sinkDirs.head.toString))
+      assert(result.schema === expected.schema, key)
+      val rows = result.collect().toSeq
+      assert(rows.nonEmpty, key)
+      assert(rows === expected.collect().toSeq, key)
+    }
+  }
 }

@@ -282,6 +282,42 @@ class LayoutPartitionsSpec extends AnyFunSuite {
     assert(layoutPartitions(-1L, 0.7, target, floor = 8) === 8,
       "a negative length (missing file) must fall to the floor, not throw")
   }
+  test("a directory input is sized by the bytes below it, not its inode") {
+    // zorderWrite sizes `lineitem.parquet` with inputBytes; on a directory
+    // of part files File.length is the directory's own ~4 KB, which pinned
+    // the width to the floor at any scale. Sparse files give a path a
+    // large logical size without using disk.
+    import graft.engine.ops.WarehouseOps.inputBytes
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def sparse(f: java.io.File, bytes: Long): java.io.File = {
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try raf.setLength(bytes) finally raf.close()
+      f
+    }
+    def layout(path: java.io.File) =
+      layoutPartitions(inputBytes(path.getPath, conf), 0.75, target, floor = 8)
+    val dir = java.nio.file.Files.createTempDirectory("layout_dir").toFile
+    val nested = new java.io.File(dir, "k=1")
+    assert(nested.mkdir())
+    val parts = Seq(sparse(new java.io.File(dir, "part-0.parquet"), 3L << 29),
+      sparse(new java.io.File(dir, "part-1.parquet"), 3L << 29),
+      sparse(new java.io.File(nested, "part-2.parquet"), 3L << 29)) // 1.5 GiB each
+    assert(inputBytes(dir.getPath, conf) === parts.map(_.length).sum)
+    assert(layout(dir) === 27, "4.5 GiB × 0.75 at 128 MiB per file")
+    assert(layoutPartitions(dir.length, 0.75, target, floor = 8) === 8,
+      "the old File.length sizing stayed at the floor")
+    parts.foreach(_.delete())
+
+    // The local plan is unchanged: a 15 MiB lineitem (sf0.1), as one file
+    // or as a directory of part files, stays at the floor of 8.
+    parts.take(2).foreach(sparse(_, 15L << 19))
+    assert(inputBytes(dir.getPath, conf) === (15L << 20))
+    assert(layout(dir) === 8)
+    val single = sparse(new java.io.File(nested, "lineitem.parquet"), 15L << 20)
+    assert(inputBytes(single.getPath, conf) === (15L << 20))
+    assert(layout(single) === 8)
+    (parts.take(2) :+ single).foreach(_.delete()); nested.delete(); dir.delete()
+  }
 }
 
 /** Compact driver-contract line (r18, VERDICT r17 #1): the final stdout
