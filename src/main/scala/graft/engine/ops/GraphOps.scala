@@ -79,9 +79,7 @@ object GraphOps {
   }
 
   private[graft] def itemEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
-      itemEdgesPlan(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.engine.CacheReaper.persist(itemEdgesPlan(s, dir))
 
   /** Per-item purchase counts (k, n) — the seed-derivation aggregate q143
     * (top-5 seeds) and q150 (top-1 root) both need (r18, VERDICT r17 #3):
@@ -94,13 +92,12 @@ object GraphOps {
     * is O(items) memory. Downstream orderBy/limit is unchanged, so seeds
     * and root are bit-identical to the per-query scans they replace. */
   private[graft] def purchaseCounts(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.persist(
       Tables.table(s, dir, "events")
         .select(col("event_type"),
           graft.engine.expr.JsonIntKey.of(col("props"), "k").cast("int").as("k"))
         .where(col("k").isNotNull && col("event_type") === "purchase")
-        .groupBy("k").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("k").agg(count(lit(1)).as("n")))
 
   // --- q139: PageRank over the item-transition graph -----------------------
   // Nodes = items (props.$.k); a directed edge src→dst with weight w means
@@ -226,14 +223,13 @@ object GraphOps {
     * the persist is metadata-sized. */
   private[graft] def typeTransitions(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.persist(
       Tables.table(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("dst"))
         .withColumn("src", lag(col("dst"), 1).over(w))
         .where(col("src").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("src", "dst").agg(count(lit(1)).as("n")))
   }
 
   // --- q144: Markov transition matrix over event types ---------------------

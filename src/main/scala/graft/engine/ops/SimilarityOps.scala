@@ -28,11 +28,10 @@ object SimilarityOps {
     * candidate-pair set — corpus-fraction-sized (pairs near cosine ≥ 0.10),
     * orders smaller than the vectors it derives from. */
   private[ops] def srpPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.persist(
       graft.operators.Similarity
         .srpBandedPairs(Tables.table(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.10, dim = 64, tables = 8, bitsPerTable = 6, bucketCap = 256)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          threshold = 0.10, dim = 64, tables = 8, bitsPerTable = 6, bucketCap = 256))
 
   /** The distinct-trigram shingle frame (doc_id, sh) over documents with
     * ≥3 tokens — the shared front end of q48 (banded-MinHash Jaccard),
@@ -40,12 +39,11 @@ object SimilarityOps {
     * persisted + tracked (r18, VERDICT r17 #4) so the tokenize+hash pass
     * over the corpus runs once per run instead of three times. */
   private[graft] def shingled(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.persist(
       Tables.table(s, dir, "documents")
         .withColumn("l", split(col("text"), " "))
         .where(size(col("l")) >= 3)
-        .select(col("doc_id"), graft.functions.GraftFunctions.hashedShingles("l").as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), graft.functions.GraftFunctions.hashedShingles("l").as("sh")))
 
   /** Verified fuzzy name pairs (str_a < str_b, 1 ≤ dist ≤ 3) over the
     * part-name vocabulary — the shared PassJoin candidate+verify pipeline
@@ -54,11 +52,10 @@ object SimilarityOps {
     * verification per run instead of two. Vocabulary-scale by contract
     * (distinct names), so the persist is metadata-sized. */
   private[graft] def fuzzyNamePairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.engine.CacheReaper.track(
+    graft.engine.CacheReaper.persist(
       graft.operators.FuzzyJoin
         .similarStringPairs(
-          Tables.table(s, dir, "part").select("p_name"), "p_name", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          Tables.table(s, dir, "part").select("p_name"), "p_name", 3))
 
   // --- q47: SimHash near-dup candidates (portable bit-sampling hashes) ----
   // 64-bit SimHash per doc (sign of per-bit ±1 sums over token hashes),
@@ -945,20 +942,15 @@ object SimilarityOps {
   // broadcast, CC shuffles the pair aggregate only. Singleton records
   // (no fuzzy neighbor) are not clusters and don't appear — the q75
   // convention, mirrored by the oracle's edge-derived node set.
-  /** The q149 atom graph, shared with the guard-sizing dev probe
-    * (tools/Q149Probe) so the probe can never desynchronize from the
-    * shipped edge construction (r11 review finding): returns
-    * (atom groups g [persisted+tracked], fuzzy name pairs nn,
+  /** The q149 atom graph: returns (atom groups g [persisted+tracked],
     * normalized undirected atom edges). */
-  private[graft] def entityAtomGraph(s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def entityAtomGraph(s: org.apache.spark.sql.SparkSession,
+      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val p = Tables.table(s, dir, "part")
       .select("p_partkey", "p_brand", "p_type", "p_name")
-    val g = graft.engine.CacheReaper.track(
+    val g = graft.engine.CacheReaper.persist(
       p.groupBy("p_name", "p_brand", "p_type")
-        .agg(min("p_partkey").as("node"), count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(min("p_partkey").as("node"), count(lit(1)).as("cnt")))
     val nn = fuzzyNamePairs(s, dir) // shared PassJoin pipeline with q66 (r18)
     val sym = nn.select(explode(array(
         struct(col("str_a"), col("str_b")),
@@ -973,7 +965,7 @@ object SimilarityOps {
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .distinct()
-    (g, nn, edges)
+    (g, edges)
   }
 
   private val q149 = QueryDef(
@@ -1004,7 +996,7 @@ object SimilarityOps {
     // atom edge set is vocabulary×blocks-sized — orders smaller, and the
     // gap widens with row count. Bit-identical to the oracle's row-level
     // recursive closure.
-    val (g, _, edges) = entityAtomGraph(s, dir)
+    val (g, edges) = entityAtomGraph(s, dir)
     // Bounded CC (r11): the atom graph is vocabulary-derived (distinct
     // names × blocks — 64 names / ~11k atom edges at sf0.1, growing with
     // the VOCABULARY, not the row count), so the edge set collects under

@@ -276,32 +276,31 @@ object Dedup {
     // shufflePartitions = None or use spark.newSession() for isolation.
     // (Same pattern and caveat in connectedComponents below.)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    shufflePartitions.foreach(p =>
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString))
-    // The conf must be held through count() — shuffle partitioning is
-    // resolved at ACTION time, not DataFrame-construction time.
-    val (norm, n) =
+    // Call-local state, not a library cache: unpersisted in the finally.
+    val norm = pairs
+      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .where(col("a") =!= col("b"))
+      .select(fLeast(col("a"), col("b")).as("a"),
+        fGreatest(col("a"), col("b")).as("b"))
+      .distinct()
+    try {
+    // The conf must be held through persist() and count() — the cached
+    // plan is planned at persist time and executed at count time, not at
+    // DataFrame-construction time.
+    val n =
       try {
-        val f = graft.engine.CacheReaper.track(pairs
-          .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-          .where(col("a") =!= col("b"))
-          .select(fLeast(col("a"), col("b")).as("a"),
-            fGreatest(col("a"), col("b")).as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        (f, f.count())
+        shufflePartitions.foreach(p =>
+          spark.conf.set("spark.sql.shuffle.partitions", p.toString))
+        norm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     if (n > driverMaxEdges) {
       // Distributed CC is EAGER (its convergence loop materializes the
       // final labels before returning), so the cached edges can be
       // released as soon as it returns.
-      val out = connectedComponents(norm, "a", "b", maxIter, shufflePartitions)
-      norm.unpersist()
-      out
+      connectedComponents(norm, "a", "b", maxIter, shufflePartitions)
     } else {
       Dedup.boundedDriverPathHits.incrementAndGet()
       val probe = norm.collect()
-      norm.unpersist()
       // Union-find with path compression; roots elect the component MIN.
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -319,6 +318,7 @@ object Dedup {
       import spark.implicits._
       nodes.map(n => (n, find(n))).toSeq.toDF("node", "label")
     }
+    } finally norm.unpersist()
   }
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,

@@ -1,17 +1,19 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.engine.CacheReaper
 
 /** The session-cache registry's contract (r07, ADVICE r06 #1): tracked
-  * frames are released on demand, release is idempotent, and a released
-  * frame is genuinely uncached (re-use recomputes; no stale blocks). */
+  * frames are released on demand, release is idempotent, a released
+  * frame is genuinely uncached (re-use recomputes; no stale blocks), and
+  * the registry holds one ref per distinct cached plan. */
 class CacheReaperSpec extends SparkTestBase {
 
-  test("track returns its argument; release unpersists and is idempotent") {
-    val df = spark.range(0, 1000).withColumn("x", col("id") * 2).persist()
-    val tracked = CacheReaper.track(df.toDF())
+  test("persist returns its argument; release unpersists and is idempotent") {
+    val df = spark.range(0, 1000).withColumn("x", col("id") * 2)
+    val tracked = CacheReaper.persist(df)
     assert(tracked.count() === 1000L)
     assert(df.storageLevel.useMemory, "frame should be cached after the action")
     CacheReaper.release()
@@ -21,41 +23,68 @@ class CacheReaperSpec extends SparkTestBase {
     assert(tracked.count() === 1000L, "released frame must still compute from lineage")
   }
 
-  test("a capped reaper evicts oldest-first instead of growing unboundedly") {
-    // r08, VERDICT r07 #4: release-at-end bounds the JVM lifetime but not
-    // a long interactive session that never calls release(); past capacity
-    // the registry must unpersist-and-drop the OLDEST entry (always safe —
-    // the frame recomputes on next use), not accumulate strong refs.
-    CacheReaper.release() // clean slate — other suites share the registry
-    System.setProperty("graft.cacheReaper.max", "4")
-    try {
-      val dfs = (0 until 6).map { i =>
-        val df = spark.range(i * 100, i * 100 + 50).toDF().persist()
-        df.count() // materialize so eviction visibly unpersists blocks
-        CacheReaper.track(df)
-        df
-      }
-      assert(CacheReaper.trackedCount === 4,
-        "registry must hold exactly the cap after overflow")
-      assert(!dfs(0).storageLevel.useMemory && !dfs(1).storageLevel.useMemory,
-        "the two oldest caches must have been evicted (unpersisted)")
-      (2 until 6).foreach(i => assert(dfs(i).storageLevel.useMemory,
-        s"cache $i is within capacity and must still be persisted"))
-      assert(dfs(0).count() === 50L, "an evicted frame must recompute fine")
-      CacheReaper.release()
-      dfs.foreach(d => assert(!d.storageLevel.useMemory))
-    } finally System.clearProperty("graft.cacheReaper.max")
-  }
-
   test("release only touches tracked frames") {
-    val tracked = spark.range(0, 10).toDF().persist()
+    val tracked = CacheReaper.persist(spark.range(0, 10).toDF())
     val untracked = spark.range(100, 200).toDF().persist()
-    CacheReaper.track(tracked)
     tracked.count(); untracked.count()
     CacheReaper.release()
     assert(!tracked.storageLevel.useMemory)
     assert(untracked.storageLevel.useMemory,
       "an untracked cache must survive release()")
     untracked.unpersist()
+  }
+
+  test("persisting the same plan twice tracks one ref; the second frame reads the cache") {
+    CacheReaper.release() // clean slate — other suites share the registry
+    def plan = spark.range(0, 500).withColumn("y", col("id") % 7)
+    val first = CacheReaper.persist(plan)
+    assert(first.count() === 500L)
+    val second = CacheReaper.persist(plan)
+    assert(second ne first, "the second call builds its own Dataset")
+    assert(CacheReaper.trackedCount === 1, "one cached plan must be one tracked ref")
+    assert(second.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r }.nonEmpty,
+      s"the second frame must read the cached data:\n${second.queryExecution}")
+    assert(second.count() === 500L)
+    CacheReaper.release()
+    assert(CacheReaper.trackedCount === 0)
+    assert(!second.storageLevel.useMemory, "release() must drop the shared cache")
+  }
+
+  test("a plan the caller cached first is not tracked; release leaves it cached") {
+    CacheReaper.release()
+    val own = spark.range(0, 300).toDF().persist()
+    own.count()
+    val viaLibrary = CacheReaper.persist(spark.range(0, 300).toDF())
+    assert(CacheReaper.trackedCount === 0,
+      "the library must not take over a cache the caller made")
+    assert(viaLibrary.count() === 300L)
+    CacheReaper.release()
+    assert(own.storageLevel.useMemory, "the caller's cache must survive release()")
+    own.unpersist()
+  }
+
+  test("a repeated shared-frame pass tracks no new refs") {
+    // One building and one reusing key per shared-frame family: graph
+    // edges, type transitions, SRP pairs, shingles, fuzzy name pairs,
+    // distinct tokens and term frequencies. A second pass without
+    // release() finds every frame already cached, so it may not add refs.
+    val keys = Seq(
+      "q145_graph_degrees", "q150_shortest_paths",
+      "q144_markov_transitions", "q152_pagerank_states",
+      "q34_sim_threshold_count", "q49_dedup_embed",
+      "q48_dedup_ngram_jaccard", "q124_jaccard_postings",
+      "q66_fuzzy_levenshtein", "q149_entity_resolution",
+      "q114_oov_docs", "q136_token_lift",
+      "q101_tfidf_topterms", "q118_bm25_topk")
+    CacheReaper.release()
+    def pass(): Int = {
+      keys.foreach(k => SparkEntry.queries(k)(spark, sfDir).count())
+      CacheReaper.trackedCount
+    }
+    val first = pass()
+    assert(first > 0, "the family keys must persist their shared frames")
+    assert(pass() === first, "a second pass re-tracked already-cached plans")
+    CacheReaper.release()
   }
 }
