@@ -318,19 +318,18 @@ object Bench {
   /** The untimed warm-session list (BASELINE.md methodology): each entry
     * initializes a plan SHAPE's one-time codegen/infrastructure at
     * sf0.001 so the timed slots measure query work, not first-touch
-    * compilation. Exposed as a value (r17) so probe tools
-    * (WarmupGapProbe) exercise the EXACT bench warmup instead of a
-    * drifting copy.
+    * compilation. A value (r17), so the warmup-gap measurement below ran
+    * the EXACT bench warmup instead of a drifting copy.
     *
     * r17 (optimization round): EVERY declared query, in the timed loop's
     * sorted order — the completion of the incremental r05→r07 curation
     * (q66, q111, q124, the graph family, ...) that added the worst
-    * offenders one by one as each was measured. WarmupGapProbe measured
-    * the residual: with only the 20 curated shapes warmed, first-in-
-    * family queries still paid 0.5–4.7 s of one-time codegen in their
-    * timed slots (q122's 80-term z-value interleave +4.7 s, q136 +2.8,
+    * offenders one by one as each was measured. The r17 warmup-gap probe
+    * (OPTIMIZATION_r17.md) measured the residual: with only the 20
+    * curated shapes warmed, first-in-family queries still paid 0.5–4.7 s
+    * of one-time codegen in their timed slots (q122's 80-term z-value interleave +4.7 s, q136 +2.8,
     * q118/q121/q123/q126–q129/q137 +0.7–1.4 each — both probe passes and
-    * the no-warmup TimeProbe agree on the set). The methodology already
+    * a no-warmup repeated timing agree on the set). The methodology already
     * declares exactly this cost out of the timed contract ("timed runs
     * measure query work, not first-touch class loading"), so the
     * principled list is ALL shapes, not a curation that chases the next

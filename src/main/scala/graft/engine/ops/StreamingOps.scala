@@ -19,31 +19,29 @@ import graft.engine.{QueryDef, Tables}
  */
 object StreamingOps {
 
-  /** Run a streaming query with a right-sized state-partition count.
+  /** Run `body` with the state-store/shuffle partition count sized to the
+    * STATE volume, not the corpus (the CC shufflePartitions principle).
     *
     * A stateful query's state partitioning = `spark.sql.shuffle.partitions`
     * at FIRST batch (then pinned in the checkpoint). Every micro-batch
     * commits every state store partition (the interval join keeps 4 stores
     * per partition), so an oversized count is pure fixed overhead per batch
-    * — and an undersized one caps parallelism at scale. It is therefore a
+    * — empty state-store tasks still pay scheduling and commit — and an
+    * undersized one caps parallelism at scale. It is therefore a
     * deliberate knob, not an inherited batch setting: sized here for the
     * local bench volume; a 100 TB deployment sets it to O(executor cores)
-    * once at checkpoint creation. r06 re-measurement (StreamProbe, q85
-    * shape at sf0.1, warm): 8 parts 2.7 s, 4 parts 1.9 s, 2 parts 1.8 s
-    * — 4 takes the 2× win without flooring local parallelism. */
-  /** Run `body` with the state-store/shuffle partition count sized to the
-    * STATE volume, not the corpus (the CC shufflePartitions principle —
-    * empty state-store tasks cost scheduling and commit overhead per
-    * micro-batch). Retuned by StreamProbe measurement each time the data
-    * or host shifts: 8→4 in r06, 4→2 in r07 (per-query wall 2.2→2.0 s on
-    * the q85 shape; state at sf0.1 is a few thousand rows). At 100 TB
-    * state volume this knob goes UP with the state, like any shuffle. */
+    * once at checkpoint creation, and the knob goes UP with the state like
+    * any shuffle. Retuned by measurement each time the data or host
+    * shifts (`graft.tools.Probe run --ab spark.graft.stream.statePartitions=N`
+    * A/Bs it): r06 on the q85 shape at sf0.1, warm, 8 parts 2.7 s, 4 parts
+    * 1.9 s, 2 parts 1.8 s, so 8→4; r07 4→2 (per-query wall 2.2→2.0 s; state
+    * at sf0.1 is a few thousand rows). */
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     // Conf override (r18): the deliberate deployment knob made visible as
-    // a session conf so probe tools can A/B it without editing builders —
-    // a 100 TB checkpoint sets it to O(executor cores) at creation; the
-    // local default stays the StreamProbe-measured optimum passed in.
+    // a session conf so `Probe run --ab` can A/B it without editing
+    // builders — a 100 TB checkpoint sets it to O(executor cores) at
+    // creation; the local default stays the measured optimum passed in.
     val eff = s.conf.getOption("spark.graft.stream.statePartitions")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(n)
     s.conf.set("spark.sql.shuffle.partitions", eff.toString)

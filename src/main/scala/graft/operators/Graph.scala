@@ -154,11 +154,13 @@ object Graph {
     // cardinality is collected right below), but the caller's seed PLAN
     // can be arbitrarily heavy — q143 derives it from a full events scan
     // — and it was executed twice: once for the count, once inside the
-    // `bases` join. localCheckpoint costs one job over a tiny frame and
-    // makes the bases join read a handful of materialized rows (the
-    // ≤5-row checkpoint blocks are reclaimed by the ContextCleaner;
-    // eager release is pointless at the contract's seed size).
-    val seedSet = seeds.select(col("v")).distinct().localCheckpoint()
+    // `bases` join. The persisted seed set is materialized by the
+    // countAndMaxW action below, so the bases join reads a handful of
+    // cached rows. A persist, unlike a localCheckpoint (a new RDD, so a
+    // new plan on every call), keeps the seed plan equal across calls:
+    // a repeated q143 finds `bases` and `eb` already cached instead of
+    // tracking two more refs per run until release().
+    val seedSet = graft.engine.CacheReaper.persist(seeds.select(col("v")).distinct())
     val (nSeeds, maxW) = countAndMaxW(seedSet, e)
     require(nSeeds > 0, "personalizedPagerank: empty seed set")
     requireWeightHeadroom(maxW)

@@ -67,10 +67,12 @@ class CacheReaperSpec extends SparkTestBase {
   test("a repeated shared-frame pass tracks no new refs") {
     // One building and one reusing key per shared-frame family: graph
     // edges, type transitions, SRP pairs, shingles, fuzzy name pairs,
-    // distinct tokens and term frequencies. A second pass without
-    // release() finds every frame already cached, so it may not add refs.
+    // distinct tokens and term frequencies; plus q143, whose seed set and
+    // the frames built on it must be plans equal across calls. A second
+    // pass without release() finds every frame already cached, so it may
+    // not add refs.
     val keys = Seq(
-      "q145_graph_degrees", "q150_shortest_paths",
+      "q145_graph_degrees", "q150_shortest_paths", "q143_personalized_pagerank",
       "q144_markov_transitions", "q152_pagerank_states",
       "q34_sim_threshold_count", "q49_dedup_embed",
       "q48_dedup_ngram_jaccard", "q124_jaccard_postings",
