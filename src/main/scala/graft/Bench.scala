@@ -551,7 +551,7 @@ object Bench {
     // r13): that block releases every library cache per key, so a
     // recapture placed after it would start in a state no fresh capture
     // ever sees. The recapture starts LIBRARY-COLD itself (same
-    // semantics as retimed_cold: tracked caches + schema/relation memo
+    // semantics as retimed_cold: tracked caches + Tables relation memo
     // released; JIT, codegen, and the OS page cache stay warm) — without
     // the release, the cross-query caches the FIRST pass built (the
     // graph family's edge aggregates, q149's CC inputs) survive into the
@@ -559,7 +559,7 @@ object Bench {
     // fresh capture (measured on the first two real firings: q139
     // 2.56→1.42, q152 1.72→0.88, q145 1.03→0.51). Library-cold is
     // slightly CONSERVATIVE (a real bench start also has the sf0.001
-    // warmup's schema entries) — the right direction for adjudication
+    // warmup's relation-memo entries) — the right direction for adjudication
     // evidence. (First real firing, same day: first pass 90.31 s at
     // mid-canary 0.513, recapture 80.64 s — warm-biased; post-fix
     // recaptures are directly gate-comparable.)
@@ -605,7 +605,7 @@ object Bench {
     // host-window spike recovers — the JSON self-adjudicates the ambiguity
     // that made r06's q12 5.18-vs-1.58 call require bench_runs archaeology.
     // Known bias (ADVICE r07): the re-time runs with every long-lived cache
-    // warm (graph edge caches, schema cache, JIT), so it measures STEADY
+    // warm (graph edge caches, relation memo, JIT), so it measures STEADY
     // cost, not first-run cost — it can exonerate a window spike but cannot
     // distinguish "structurally slow first run" from one; a genuine
     // cache-materialization cost re-times fast. That is the intended
@@ -649,7 +649,7 @@ object Bench {
     // can EXONERATE a host-window spike but cannot CONFIRM a structural
     // regression whose cost hides in cache/first-run materialization.
     // Release the library's tracked caches (graph edge aggregates et al.)
-    // and the parquet schema cache first, then re-time each over-budget
+    // and the Tables relation memo first, then re-time each over-budget
     // query once more: a query still fast here was a window spike
     // (two-sided verdict); a query slow here pays a real repeatable cost.
     // Semantics: "cold" = LIBRARY-cold — JIT, codegen caches, and the OS

@@ -158,102 +158,51 @@ object Tables {
         }
     }
 
-  /** Session-lifetime cache of the PHYSICAL parquet schema per (path,
-    * mtime, size, content token). Every query builder calls [[table]]
-    * 1–6× and a bench/verify run makes 151+ of those calls — without this,
-    * each one would re-resolve the schema at analysis time, pure constant
-    * driver-path latency (r07, VERDICT r06 #5). An unchanged input passes
-    * the cached schema to `spark.read.schema(...)`, which skips Spark's
-    * inference entirely; [[normalize]] still runs per load, so drift
-    * handling is unchanged.
-    *
-    * How a miss resolves (see [[resolveSchema]]): a single FILE has its
-    * footer read on the driver and converted with Spark's own
-    * `ParquetFileFormat.readSchemaFromFooter` — no Spark job, where
-    * `spark.read.parquet(path).schema` resolves a throwaway relation and
-    * runs a one-task footer-reading job even for one file (all ten sf0.01
-    * tables cold: 1.06 s → 0.16 s, traced perfbench pass on 4 cores). A
-    * DIRECTORY keeps Spark's inference (partition discovery, summary
-    * files, schema merging).
-    *
-    * Invalidation is by mtime+size (the q121 incremental-agg precedent)
-    * PLUS a content token ([[contentToken]]: the trailer CRC for a file,
-    * the listing digest for a directory). The token closes the ADVICE-r07
-    * blind spot (a file rewritten with the same byte length inside the
-    * filesystem's mtime granularity was indistinguishable from the
-    * original): any schema change rewrites the Thrift footer, so the
-    * trailer CRC changes even when (mtime, size) cannot. The cost is one
-    * tail pread of the footer (whole footer up to 1 MiB; past that, a
-    * 64 KiB head + 64 KiB tail sample — see [[trailerToken]]) per
-    * [[table]] call, served from the OS page cache on repeats.
-    * [[clearSchemaCache]] stays as the belt-and-braces hook (and for
-    * tests).
-    *
-    * Cross-session safety: the cache is JVM-global, but the key is purely
-    * physical and the VALUE is the file's physical schema — which session
-    * resolved it cannot matter because [[table]] / [[tableStream]] pin
-    * `nanosAsLong=true` on the session right before every read, so two
-    * concurrent sessions (even ones created with different initial
-    * configs) always load through identical conversion settings and
-    * identical normalization (SchemaDriftSpec r08 proves the two-session
-    * case end-to-end). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), StructType]()
-
-  /** Session-lifetime memo of the fully-resolved, NORMALIZED base
-    * DataFrame per (session, path, mtime, size, trailer-CRC) — one level
-    * above [[schemaCache]] (r12, VERDICT r11 #1: the 137-query tail is
-    * dominated by per-query fixed cost; PhaseProbe measured 30–70 ms of
-    * steady-state DataFrame-CONSTRUCTION time per query, of which the
-    * `spark.read` relation resolution + normalize analysis per table is
-    * the bulk). DataFrames are immutable, so handing every caller the
-    * same resolved plan is safe; invalidation mirrors the schema cache
-    * (a regenerated file re-keys), and the session sits in the key so a
-    * test session never sees another session's relation. Cleared by
-    * [[clearSchemaCache]] so Bench's library-cold retimes stay honest. */
+  /** Session-lifetime memo of the resolved, normalized DataFrame of each
+    * single-file table, keyed by (session, path, mtime, size,
+    * [[trailerToken]]). Query builders call [[table]] 1–6× per query and a
+    * bench or verify run makes hundreds of those calls over ten files; a
+    * hit skips the footer read, the relation resolution and the normalize
+    * analysis that a cold load pays (~13–17 ms per table). DataFrames are
+    * immutable, so every caller can share one. A rewritten file re-keys:
+    * any schema change rewrites the footer, so the trailer CRC moves even
+    * when (mtime, size) cannot. The session is part of the key, so no
+    * session sees a relation another session resolved. Directories are
+    * not memoized (see [[table]]). */
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, Long, Long, Long), DataFrame]()
 
-  /** Manual invalidation hook (tests; non-file paths whose rewrite story
-    * remains mtime+size — see [[trailerToken]]). */
-  private[graft] def clearSchemaCache(): Unit = {
-    schemaCache.clear()
-    relationCache.clear()
-    trailerMemo.clear()
-  }
+  /** Empties the relation memo, so the next [[table]] call of every
+    * single-file table resolves it from its footer again. Every pass of
+    * perfbench and `graft.tools.Probe` starts library-cold with it, as do
+    * Bench's cold retimes and recapture; tests use it to force a cold
+    * load. */
+  private[graft] def clearSchemaCache(): Unit = relationCache.clear()
 
-  /** Count of actual schema resolutions performed (test observability:
-    * SchemaDriftSpec asserts a repeat load does NOT increment this). */
+  /** Count of footer schema reads by [[resolveSchema]] (test
+    * observability: a memo hit must not increment it). */
   private[graft] val schemaInfersTotal = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Count of actual parquet-footer preads performed by trailerToken
-    * (test observability, r16: the bounded-walk pin asserts a directory
-    * listing costs ≤ [[listingTrailerSampleCap]]+1 reads regardless of
-    * file count, and ~zero once settled footers are memoized). */
+  /** Count of footer preads by [[trailerToken]] (test observability: a
+    * directory listing costs at most [[listingTrailerSampleCap]]+1 reads,
+    * whatever its file count). */
   private[graft] val trailerReadsTotal = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Cheap CONTENT token for the schema-cache key: CRC32 over the parquet
-    * footer — the trailer is [footer bytes][4-byte LE footer
-    * length]["PAR1"], so the length is read from the last 8 bytes first
-    * and the hash covers the footer itself (r11, ADVICE r09 #2: the
-    * previous fixed min(len, 4096)-byte window left a blind spot for
-    * footers past 4 KiB — a schema edit confined to the footer's HEAD,
-    * e.g. an early field in a very wide schema, could leave the hashed
-    * tail byte-identical). Footers up to 1 MiB — every real table this
-    * engine touches — hash in full; a larger footer hashes a 64 KiB HEAD
-    * + 64 KiB TAIL sample plus the length, which still covers both the
-    * schema head (the old blind spot) and the offset-carrying tail while
-    * bounding the per-[[table]]-call cost: the token is part of the
-    * cache KEY, recomputed on every call, so it must never be allowed to
-    * scale with an unbounded (or corrupt) footer length. A rewrite that
-    * preserves byte length but changes the schema perturbs hashed bytes,
-    * so the token re-keys the cache where mtime+size cannot. Non-file
-    * paths return 0 here and take [[listingToken]] instead (r14, ADVICE
-    * r13 #2); truncated files, implausible footer lengths, and any I/O
-    * error return 0 and keep the plain mtime+size story — a cache-key
-    * weakening must never fail the read itself. (The RELATION memo in
-    * [[table]] refuses to serve directories at all — r13, ADVICE r12 #2.) */
+  /** Content token of one parquet file: CRC32 over its footer. The
+    * trailer is [footer bytes][4-byte LE footer length]["PAR1"], so the
+    * length is read from the last 8 bytes first and the hash covers the
+    * footer itself. A footer up to 1 MiB — every real table this engine
+    * touches — hashes in full; a larger one hashes a 64 KiB head and a
+    * 64 KiB tail plus the length, which covers both the schema head and
+    * the offset-carrying tail while keeping the per-call cost bounded:
+    * the token is part of a cache key, computed on every call, so it must
+    * never scale with an unbounded (or corrupt) footer length. Any schema
+    * change rewrites hashed footer bytes, so a rewrite that keeps the
+    * byte length and lands inside the filesystem's mtime granularity
+    * still moves the token. Non-file paths, truncated files, implausible
+    * footer lengths and any I/O error return 0, leaving mtime+size as the
+    * key: a weaker key must never fail the read itself. */
   private def trailerToken(f: java.io.File): Long = try {
     val len = f.length()
     if (!f.isFile || len < 12) 0L
@@ -294,86 +243,26 @@ object Tables {
     }
   } catch { case _: Throwable => 0L }
 
-  /** Content token for a DIRECTORY path's schema-cache key (r14, ADVICE
-    * r13 #2). For directories trailerToken degrades to 0 and an in-place
-    * part-file rewrite moves neither the directory's mtime nor its
-    * length, so the old (path, mtime, length, 0) key could serve a STALE
-    * schema into `spark.read.schema(...)` after a schema-changing
-    * rewrite — silently misreading the new files (the relation memo
-    * already refuses directories; this closes the same hole one level
-    * down, in the schema cache). CRC32 over the RECURSIVE sorted listing
-    * (r15, ADVICE r14 #1): entry name, mtime, length, and — for regular
-    * files — the entry's [[trailerToken]]. The r14 version hashed only
-    * the top-level (name, mtime, length) triple, which left two residual
-    * blind spots: an in-place part-file rewrite that preserves name and
-    * length within the filesystem's mtime granularity (mtime granularity
-    * can be a full second on some filesystems, so "a write moves the
-    * mtime" does NOT always hold inside one tick), and a rewrite nested
-    * inside a subdirectory whose top-level entry metadata never moves.
-    * The recursive walk (depth-capped at 8 against symlink cycles)
-    * closes the nesting hole; the per-file trailer CRC closes the
-    * same-tick/same-length hole exactly the way trailerToken closed it
-    * for single files — any schema change rewrites the footer bytes.
+  /** Content token of a DIRECTORY: CRC32 over its recursive sorted
+    * listing (depth-capped at 8 against symlink cycles). Every entry adds
+    * its name, mtime and length; a sampled regular file also adds its
+    * [[trailerToken]]. A part file rewritten in place moves neither the
+    * directory's mtime nor its length, and mtime granularity can be a
+    * full second, so only the footer CRC sees a same-name, same-length
+    * rewrite inside one tick; the recursive walk sees one nested in a
+    * subdirectory.
     *
-    * BOUNDED (r16, VERDICT r15 #1): the r15 version read every regular
-    * file's footer on every call — O(part-files) driver-side preads per
-    * [[table]] call, a genuine scale hazard on a 100k-part directory
-    * even though it is NOT what moved q90 (that doubling was the
-    * campaign's undisclosed local[4] execution mode, ADVICE r15 #1 —
-    * q90 never routes a directory through [[table]] at all, and the
-    * same-binary A/B reads q90 steady 0.79 s at cpus=32 vs 1.35 s at
-    * cpus=4; SCALING.md §r16). Two bounds now apply:
-    *   1. SAMPLING — at most [[listingTrailerSampleCap]] (+1 for the
-    *      last file) footers are read per call, chosen by a
-    *      deterministic stride over the walk-ordered regular files
-    *      (always including the first and last), so the token stays a
-    *      pure function of the recursive listing. Non-sampled files
-    *      contribute their (name, mtime, length) triple only — the r14
-    *      coverage. Residual hole, accepted and documented: a
-    *      same-name/same-length/same-tick rewrite of a NON-sampled file
-    *      in a >cap listing is invisible until any neighbor's metadata
-    *      moves; real writers move mtime forward, and a directory that
-    *      large already takes the uncached relation path.
-    *   2. MEMO — sampled footers are served from [[trailerMemo]] keyed
-    *      by (path, mtime, length), populated only once a file has
-    *      SETTLED (mtime older than [[trailerSettleMs]] at read time,
-    *      the git-index racy-entry rule): a same-tick rewrite can only
-    *      exist for an unsettled file, and those are recomputed every
-    *      call, so the memo never serves the stale token the per-file
-    *      CRC exists to catch. A later rewrite of a settled file moves
-    *      its mtime and misses the memo by key.
-    * Cost: one readdir per directory level + ≤cap+1 tail preads on the
-    * first call, ~zero preads on repeats once files settle. Errors
-    * degrade to 0 (the plain mtime+size story), never fail the read. */
+    * At most [[listingTrailerSampleCap]] (+1 for the last file) footers
+    * are read per call, chosen by a deterministic stride over the
+    * walk-ordered regular files (always including the first and the
+    * last), so the token is a pure function of the listing and its cost
+    * does not grow with the file count. A non-sampled file contributes
+    * its (name, mtime, length) only: a same-name, same-length, same-tick
+    * rewrite of a non-sampled file in an over-cap listing stays invisible
+    * until some entry's metadata moves; real writers move mtime forward.
+    * Cost: one readdir per directory level and at most cap+1 tail preads.
+    * Errors return 0 (the plain mtime+size story), never fail the read. */
   private[graft] val listingTrailerSampleCap = 16
-
-  /** Settled-file threshold for [[trailerMemo]] admission: a footer CRC
-    * is memoizable only when the file's mtime is at least this far in
-    * the past — inside the window a same-(path,mtime,length) rewrite is
-    * still possible on coarse-mtime filesystems, so the token is
-    * recomputed instead. 2 s covers the 1 s mtime granularity some
-    * filesystems still have, doubled for clock skew. */
-  private[graft] val trailerSettleMs = 2000L
-
-  private val trailerMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
-
-  private def cachedTrailerToken(e: java.io.File): Long = {
-    val key = (e.getPath, e.lastModified(), e.length())
-    val hit = trailerMemo.get(key)
-    if (hit ne null) hit.longValue()
-    else {
-      val tok = trailerToken(e)
-      if (System.currentTimeMillis() - key._2 > trailerSettleMs) {
-        // Pathological-growth fallback only: 64k entries ≈ 6 MiB of keys;
-        // a long-lived session cycling that many distinct part files is
-        // already paying listing costs that dwarf the memo.
-        if (trailerMemo.size > 65536) trailerMemo.clear()
-        trailerMemo.put(key, java.lang.Long.valueOf(tok))
-      }
-      tok
-    }
-  }
 
   private[graft] def listingToken(f: java.io.File): Long = try {
     val entries = Vector.newBuilder[java.io.File]
@@ -401,7 +290,7 @@ object Tables {
       crc.update(e.getName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       crc.update(java.nio.ByteBuffer.allocate(24)
         .putLong(e.lastModified()).putLong(e.length())
-        .putLong(if (sampled(i)) cachedTrailerToken(e) else 0L).array())
+        .putLong(if (sampled(i)) trailerToken(e) else 0L).array())
     }
     crc.getValue
   } catch { case _: Throwable => 0L }
@@ -422,37 +311,26 @@ object Tables {
     s"${f.length}_${f.lastModified}_${contentToken(f)}"
   }
 
-  private def physicalSchema(spark: SparkSession, path: String): StructType = {
-    val f = new java.io.File(path)
-    schemaCache.computeIfAbsent(
-      (path, f.lastModified(), f.length(), contentToken(f)), { _ =>
-        schemaInfersTotal.incrementAndGet()
-        resolveSchema(spark, path)
-      })
-  }
-
-  /** The schema `spark.read.parquet(path).schema` would infer. For a
-    * single file: the footer, read on the driver without a Spark job,
-    * through the same converter settings inference uses (Spark row
-    * metadata, nanosAsLong, INT96, inferTimestampNTZ, binary-as-string
-    * all come from the session's SQLConf), made nullable the way a file
-    * relation's data schema is. For a directory: Spark's inference. */
+  /** The schema `spark.read.parquet(path).schema` would infer for one
+    * parquet FILE, read from its footer on the driver: inference starts a
+    * one-task footer-reading Spark job, this starts none. The converter
+    * takes the same settings inference does (Spark row metadata,
+    * nanosAsLong, INT96, inferTimestampNTZ, binary-as-string all come
+    * from the session's SQLConf), and the result is made nullable the way
+    * a file relation's data schema is. */
   private[graft] def resolveSchema(spark: SparkSession, path: String): StructType = {
-    val f = new java.io.File(path)
-    if (!f.isFile) spark.read.parquet(path).schema
-    else {
-      val hadoopPath = new Path(f.getAbsoluteFile.toURI)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(hadoopPath, conf),
-        HadoopReadOptions.builder(conf, hadoopPath)
-          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-      val schema = try ParquetFileFormat.readSchemaFromFooter(
-        new Footer(hadoopPath, reader.getFooter),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      finally reader.close()
-      asNullable(schema).asInstanceOf[StructType]
-    }
+    schemaInfersTotal.incrementAndGet()
+    val hadoopPath = new Path(new java.io.File(path).getAbsoluteFile.toURI)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(hadoopPath, conf),
+      HadoopReadOptions.builder(conf, hadoopPath)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val schema = try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(hadoopPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+    asNullable(schema).asInstanceOf[StructType]
   }
 
   /** Spark's own `asNullable`, which it keeps private. */
@@ -464,35 +342,36 @@ object Tables {
     case other => other
   }
 
+  /** Read TIMESTAMP(NANOS) columns as epoch longs, which [[normalize]]
+    * converts: inert on µs files, required for ns files, so data written
+    * before the testdata's ns → µs change loads through the same path.
+    * Set on the session right before every read, so sessions created with
+    * either setting resolve and normalize a file identically. */
+  private def pinNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Read one table, normalized to its canonical schema. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val f = new java.io.File(path)
-    // Memoized-relation bypass for NON-file paths (r13, ADVICE r12 #2):
-    // for a directory of part files (engine-written outputs; not the
-    // driver's one-file-per-table layout) the key's invalidators are weak
-    // — trailerToken degrades to 0 and a content rewrite of an existing
-    // part file does not move the directory's mtime/length — so a
-    // memoized DataFrame's captured file index could reference rewritten
-    // or deleted part files. A stale RELATION is a stronger consequence
-    // than the schema-only staleness the old cache risked (the pre-r12
-    // code re-resolved the relation every call), so directories take the
-    // uncached path; the memo serves only single-file tables, where
-    // (mtime, size, trailer-CRC) is a sound content key.
+    // A directory of part files (engine-written outputs, not the one-file-
+    // per-table test data) is resolved on every call, with Spark's own
+    // inference (partition discovery, summary files, schema merging). A
+    // memo key for it would be weak — trailerToken is 0, and a part-file
+    // rewrite need not move the directory's mtime or length — and a
+    // memoized relation's file index could name rewritten or deleted
+    // part files.
     if (!f.isFile) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      return normalize(name,
-        spark.read.schema(physicalSchema(spark, path)).parquet(path))
+      pinNanosAsLong(spark)
+      return normalize(name, spark.read.parquet(path))
     }
-    // Growth bound (r13, ADVICE r12 #3): evict by SESSION, not a global
-    // clear — test suites mint many short-lived sessions whose entries
-    // (and strong session references) would otherwise pin until a >512
-    // sweep dropped the live session's hot entries along with the dead
-    // ones. Entries of stopped sessions are unreachable by construction
-    // (the session is part of the key and a stopped session never calls
-    // [[table]] again), so dropping exactly those is both safe and
-    // sufficient; the global clear stays only as the pathological
-    // fallback (512+ entries all from live sessions).
+    // Growth bound: evict by SESSION, not a global clear — test suites
+    // mint many short-lived sessions whose entries (and strong session
+    // references) would otherwise pin until a global sweep dropped the
+    // live session's hot entries with them. A stopped session never calls
+    // [[table]] again, so its entries are unreachable; dropping exactly
+    // those is safe and sufficient. The global clear is only the fallback
+    // for 512+ entries all from live sessions.
     if (relationCache.size > 512) {
       val it = relationCache.keySet.iterator()
       while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
@@ -500,22 +379,19 @@ object Tables {
     }
     relationCache.computeIfAbsent(
       (spark, path, f.lastModified(), f.length(), trailerToken(f)), { _ =>
-        // Keep setting the legacy flag: inert on µs files, required for ns
-        // files — so pre-regeneration data still loads through the same
-        // path. Only needed when the relation is actually (re-)resolved.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        normalize(name,
-          spark.read.schema(physicalSchema(spark, path)).parquet(path))
+        pinNanosAsLong(spark)
+        normalize(name, spark.read.schema(resolveSchema(spark, path)).parquet(path))
       })
   }
 
   /** Streaming read of one table file with the SAME normalization as the
-    * batch loader — every StreamingOps source routes through here (r06;
-    * previously each site hard-coded the nanos recipe). File-stream
-    * sources need a directory: point at the sf dir and glob-filter. */
+    * batch loader; every StreamingOps source routes through here.
+    * File-stream sources need a directory: point at the sf dir and
+    * glob-filter. The schema is read from the file's footer on every
+    * call; streams are not memoized. */
   def tableStream(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = physicalSchema(s, s"$dir/$name.parquet")
+    pinNanosAsLong(s)
+    val schema = resolveSchema(s, s"$dir/$name.parquet")
     normalize(name, s.readStream.schema(schema)
       .option("pathGlobFilter", s"$name.parquet").parquet(dir))
   }

@@ -29,7 +29,9 @@ import graft.engine.{CacheReaper, Tables}
   *
   * `plans` writes each key's `explain("formatted")` to
   * `<out>/<key>_<suffix>.txt` and prints one `PLAN` line of red flags:
-  * CARTESIAN, BNLJ and the Exchange, Sort, BHJ and SMJ node counts.
+  * CARTESIAN, BNLJ, `rescan=<table>×n` for each input scanned more than
+  * once by a plan that reads no cached frame, and the Exchange, Sort, BHJ
+  * and SMJ node counts.
   *
   * Keys run in Bench's sorted order. Every pass starts library-cold
   * (tracked caches released, table schemas re-resolved), as a timed
@@ -200,8 +202,17 @@ object Probe {
         Files.writeString(Paths.get(dir, s"${key}_$suffix.txt"), p)
         // The formatted details list every node once, as "(id) Name".
         def n(node: String) = s"\\(\\d+\\) $node\\b".r.findAllIn(p).size
-        Seq(if (p.contains("CartesianProduct")) "CARTESIAN" else "",
-          if (p.contains("BroadcastNestedLoopJoin")) "BNLJ" else "",
+        // Each file scan's details name its input once, as "Location:
+        // <index> [<path>, ...]"; a reused exchange does not repeat them.
+        // A cached-frame explain reprints the cached subtree, so plans
+        // with an InMemoryRelation are not counted.
+        val rescans = if (p.contains("InMemoryRelation")) Nil else
+          "Location: \\w+ \\[([^,\\]]+)".r.findAllMatchIn(p)
+            .map(_.group(1).split("/").last.stripSuffix(".parquet")).toSeq
+            .groupBy(identity).collect { case (t, s) if s.size > 1 => s"rescan=$t×${s.size}" }
+            .toSeq.sorted
+        (Seq(if (p.contains("CartesianProduct")) "CARTESIAN" else "",
+          if (p.contains("BroadcastNestedLoopJoin")) "BNLJ" else "") ++ rescans :+
           s"ex=${n("Exchange")} sort=${n("Sort")} bhj=${n("BroadcastHashJoin")} " +
             s"smj=${n("SortMergeJoin")}").filter(_.nonEmpty).mkString(" ")
       } catch { case NonFatal(e) => s"ERROR $e".linesIterator.next() }

@@ -46,7 +46,8 @@ class ProbeSpec extends SparkTestBase {
 
   test("plans writes one formatted plan and prints one flag line per key") {
     val dir = Files.createTempDirectory("probe_plans")
-    val keys = Seq(q11, "q12_join_multiway")
+    val q29 = "q29_set_ops"
+    val keys = Seq(q11, "q12_join_multiway", q29)
     val lines = probe("plans", "--sf", sfDir, "--keys", keys.mkString(","),
       "--out", dir.toString, "--suffix", "t")
     assert(lines.size === keys.size, lines.mkString("\n"))
@@ -55,6 +56,7 @@ class ProbeSpec extends SparkTestBase {
       assert(Files.readString(dir.resolve(s"${key}_t.txt")).contains("== Physical Plan =="))
     }
     assert(dir.toFile.list().length === keys.size)
+    assert(lines.last.contains("rescan=customer×3 rescan=supplier×3"), lines.last)
   }
 
   test("an unknown mode, flag, key or value, or a missing --sf or --out, throws with the usage") {

@@ -50,14 +50,18 @@ class SchemaDriftSpec extends SparkTestBase {
       "us-ntz" -> baseEvents.withColumn("ts", col("ts").cast(TimestampNTZType)),
       // plain LTZ — the canonical type itself
       "ltz" -> baseEvents)
-    for ((label, df) <- variants) {
+    // Each encoding as one file and as a 2-part directory: a directory is
+    // read with no explicit schema, so it pins the loader's flag and
+    // normalization on Spark's own inference.
+    for ((label, df) <- variants; layout <- Seq("file", "dir")) {
       val dir = fixtureDir()
-      writeSingleFile(df, dir, "events")
+      if (layout == "file") writeSingleFile(df, dir, "events")
+      else df.repartition(2).write.parquet(dir.resolve("events.parquet").toString)
       val loaded = Tables.table(spark, dir.toString, "events")
-      assert(loaded.schema("ts").dataType === TimestampType, label)
+      assert(loaded.schema("ts").dataType === TimestampType, s"$label $layout")
       val got = loaded.select("event_id", "ts").as[(Long, java.sql.Timestamp)]
         .collect().toMap
-      assert(got === expected, s"$label values drifted")
+      assert(got === expected, s"$label $layout values drifted")
     }
   }
 
@@ -294,14 +298,12 @@ class SchemaDriftSpec extends SparkTestBase {
     assert(after.count() === 240L)
   }
 
-  test("two sessions with different nanosAsLong configs share the cache safely") {
-    // r08 (VERDICT r07 #5): the schema cache is JVM-global but the loader
-    // pins nanosAsLong=true on the session right before EVERY read, so a
-    // second session created with the opposite setting still loads
-    // through identical inference + normalization — the cached physical
-    // schema can never be interpreted under a different flag. Proven on
-    // the ns-long encoding, where the flag is exactly what decides how a
-    // timestamp column materializes.
+  test("two sessions with different nanosAsLong configs load identically") {
+    // r08 (VERDICT r07 #5): the loader pins nanosAsLong=true on the session
+    // right before EVERY read, so a second session created with the
+    // opposite setting still loads through identical footer conversion +
+    // normalization. Proven on the ns-long encoding, where the flag is
+    // exactly what decides how a timestamp column materializes.
     val dir = fixtureDir()
     writeSingleFile(
       baseEvents.withColumn("ts", expr("unix_micros(ts) * 1000")), dir, "events")
@@ -309,10 +311,7 @@ class SchemaDriftSpec extends SparkTestBase {
     val sessionB = spark.newSession()
     sessionB.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     val a = Tables.table(sessionA, dir.toString, "events")
-    val infersAfterA = Tables.schemaInfersTotal.get()
     val b = Tables.table(sessionB, dir.toString, "events")
-    assert(Tables.schemaInfersTotal.get() === infersAfterA,
-      "the second session must hit the shared cache, not re-infer")
     assert(a.schema("ts").dataType === TimestampType)
     assert(b.schema("ts").dataType === TimestampType)
     val va = a.select("event_id", "ts").collect().map(r => r.getLong(0) -> r.getTimestamp(1)).toMap
@@ -320,7 +319,7 @@ class SchemaDriftSpec extends SparkTestBase {
     assert(va === vb, "sessions with different initial configs diverged on the same file")
     assert(sessionB.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true",
       "the loader must have pinned the flag on the divergent session — " +
-        "that pin is WHY the global cache is session-safe")
+        "that pin is WHY both sessions load identically")
   }
 
   // --- Driver-side footer resolution -------------------------------------

@@ -623,21 +623,6 @@ class ListingTokenSpec extends AnyFunSuite {
     assert(reads > 0, "the sample must still read SOME footers")
   }
 
-  test("settled footers are memoized: a repeat walk is metadata-only") {
-    val d = tmpDir()
-    val past = System.currentTimeMillis() - 10 * 1000
-    (0 until 20).foreach { i =>
-      val p = d.resolve(f"part-$i%05d.parquet")
-      writeFakeParquet(p, Array.fill[Byte](16)(7))
-      assert(p.toFile.setLastModified(past), "could not age the fixture file")
-    }
-    val t0 = graft.engine.Tables.listingToken(d.toFile)
-    val before = graft.engine.Tables.trailerReadsTotal.get()
-    assert(graft.engine.Tables.listingToken(d.toFile) === t0)
-    assert(graft.engine.Tables.trailerReadsTotal.get() === before,
-      "a repeat walk over settled files must serve every sampled footer from the memo")
-  }
-
   test("unsettled files are never memoized: the same-tick rewrite pin holds for them") {
     val d = tmpDir()
     val f = d.resolve("part-0.parquet")
