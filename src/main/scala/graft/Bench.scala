@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every declared query at the env-selected
   * scale factor, prints ONE JSON line.
@@ -172,102 +171,6 @@ object Bench {
       case None => true
     }
 
-  /** Wakeup-latency sampling (r16). SCALING.md §variance root-caused the
-    * host's degraded phases to hypervisor thread-wakeup stalls: a
-    * `sleep(1 ms)` overshoot probe reads p99 ≈ 0.2 ms on the idle
-    * baseline and p99 3.5–4.9 ms (max 6.7) during capture-killing
-    * episodes — but that probe ran by hand, outside the artifact. Every
-    * timed pass now runs the probe CONCURRENTLY (one daemon thread, all
-    * sleeps — zero measurable load) and banks the overshoot histogram in
-    * the JSON, so window adjudication is direct measurement instead of
-    * canary inference: a gate failure with wakeup p99 at the clean floor
-    * points at the binary; one with p99 in the millisecond class points
-    * at the host. Observational only — the window classifier stays
-    * canary-based and the gate math is untouched.
-    *
-    * CAVEAT (ADVICE r16): the 0.2 ms clean floor was calibrated on an
-    * idle host. During a pass saturating all 32 cores the sleeper's
-    * overshoot also rises from the benchmark's own run-queue contention,
-    * so a millisecond-class in-pass p99 does NOT by itself exonerate the
-    * binary — a genuinely slower binary burns more CPU and elevates p99
-    * too. Only the multi-second max stalls are unambiguous host signal;
-    * read p99 against same-binary gate-pass captures (the under-load
-    * floor), not against the idle 0.2 ms.
-    *
-    * Histogram upper bounds in ms of overshoot; the last bucket is
-    * overflow. Resolution targets the one distinction that matters:
-    * the 0.1–0.2 ms clean class vs the 2–5 ms episode class. */
-  val wakeupBoundsMs: Array[Double] = Array(0.2, 0.5, 1.0, 2.0, 5.0, 10.0, 50.0)
-
-  def wakeupBucket(overshootMs: Double): Int = {
-    val i = wakeupBoundsMs.indexWhere(overshootMs <= _)
-    if (i < 0) wakeupBoundsMs.length else i
-  }
-
-  /** Approximate quantile from the histogram: the upper bound of the
-    * bucket holding the rank-q sample (overflow bucket → the exact max).
-    * -1 with no samples. Upper bounds make the estimate conservative —
-    * it can only over-state the latency, never exonerate a bad window. */
-  def wakeupQuantileMs(counts: Array[Long], q: Double, maxMs: Double): Double = {
-    val total = counts.sum
-    if (total <= 0) return -1.0
-    val rank = math.max(1L, math.ceil(q * total).toLong)
-    var cum = 0L
-    var i = 0
-    while (i < counts.length) {
-      cum += counts(i)
-      if (cum >= rank)
-        return if (i < wakeupBoundsMs.length) wakeupBoundsMs(i) else maxMs
-      i += 1
-    }
-    maxMs
-  }
-
-  /** JSON for one pass's overshoot histogram. `over_1ms` counts samples in
-    * buckets whose LOWER edge is ≥ 1 ms (entirely past the millisecond
-    * line — an undercount, consistent with the conservative quantiles). */
-  def wakeupJson(counts: Array[Long], maxMs: Double): String = {
-    val total = counts.sum
-    if (total <= 0) """{"samples":0}"""
-    else {
-      val firstOver = wakeupBoundsMs.indexWhere(_ >= 1.0) + 1
-      val over1 = counts.drop(firstOver).sum
-      // Locale.ROOT: the f-interpolator uses the default locale, which can
-      // emit comma decimal separators and corrupt the JSON artifact.
-      def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      s"""{"samples":$total,"p50_ms":${ms(wakeupQuantileMs(counts, 0.50, maxMs))},""" +
-        s""""p99_ms":${ms(wakeupQuantileMs(counts, 0.99, maxMs))},""" +
-        s""""max_ms":${ms(maxMs)},"over_1ms":$over1}"""
-    }
-  }
-
-  /** The concurrent sampler: sleep(1 ms) in a loop, histogram the
-    * overshoot. Daemon + interrupt-stopped so it can never outlive or
-    * stall a capture; the atomic counters make stopJson()'s read safe. */
-  final class WakeupSampler {
-    private val counts =
-      new java.util.concurrent.atomic.AtomicLongArray(wakeupBoundsMs.length + 1)
-    @volatile private var maxMs = 0.0
-    @volatile private var running = true
-    private val thread = new Thread(() => {
-      while (running) {
-        val t0 = System.nanoTime()
-        try Thread.sleep(1) catch { case _: InterruptedException => () }
-        val over = math.max(0.0, (System.nanoTime() - t0) / 1e6 - 1.0)
-        if (over > maxMs) maxMs = over
-        counts.incrementAndGet(wakeupBucket(over))
-      }
-    }, "bench-wakeup-sampler")
-    thread.setDaemon(true)
-    def start(): this.type = { thread.start(); this }
-    def stopJson(): String = {
-      running = false
-      thread.interrupt()
-      try thread.join(1000) catch { case _: InterruptedException => () }
-      wakeupJson(Array.tabulate(counts.length())(counts.get), maxMs)
-    }
-  }
-
   /** JSON rendering of the cpus env value: a number when parseable (every
     * legitimate mode), a quoted string otherwise — the old bare
     * interpolation made `"cpus":all` silently corrupt the whole line when
@@ -275,6 +178,43 @@ object Bench {
     * a broken env. */
   def cpusJson(cpus: String): String =
     cpus.trim.toIntOption.map(_.toString).getOrElse("\"" + cpus + "\"")
+
+  /** JSON array of strings (query keys: no escaping needed). */
+  private def jsonStrings(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** One timed pass over the full suite: (key, seconds, ok) per query in
+    * loop order, and the pass's pre / mid / post canary pairs (trivial +
+    * shuffle-weight; -1 = the canary failed). The post pair records the
+    * host mode the pass ENDED in (SCALING.md §variance): the trivial
+    * canary (global top-10 over 150k rows) reads ~0.2 s clean and ≥3×
+    * that stalled; the shuffle canary also discriminates the milder
+    * degraded mode. It is timed through SparkEntry.queries, so the Tables
+    * relation memo shifted its floor: clean ~0.31–0.37 s on r12+ binaries
+    * vs 0.39–0.41 across r04–r11, degraded ~0.45+ — bucket cross-round
+    * canary comparisons by binary era. */
+  case class Pass(results: Seq[(String, Double, Boolean)],
+      pre: Double, shufflePre: Double, mid: Double, shuffleMid: Double,
+      post: Double, shufflePost: Double) {
+    def total: Double = results.collect { case (_, v, true) => v }.sum
+    def windowDegradedJson: String =
+      Bench.windowDegradedJson(shufflePre, shuffleMid, shufflePost)
+  }
+
+  /** The per-pass fields of the full artifact, rendered once for both the
+    * top-level line and its `recapture` object: full-precision per-query
+    * seconds (a failed query reads -1.0 and is listed under `failed`, so
+    * it can never make the total look better), the six canary seconds and
+    * `window_degraded`. Pure formatter, pinned by UnitSpecs. */
+  def passJson(p: Pass): String = {
+    val qs = p.results.map { case (k, v, ok) =>
+      "\"" + k + "\":" + (if (ok) v else -1.0) }.mkString("{", ",", "}")
+    s""""queries":$qs,"failed":${jsonStrings(p.results.collect { case (k, _, false) => k })},""" +
+      s""""canary_pre_sec":${p.pre},"canary_shuffle_pre_sec":${p.shufflePre},""" +
+      s""""canary_mid_sec":${p.mid},"canary_shuffle_mid_sec":${p.shuffleMid},""" +
+      s""""canary_sec":${p.post},"canary_shuffle_sec":${p.shufflePost},""" +
+      s""""window_degraded":${p.windowDegradedJson}"""
+  }
 
   /** Compact driver-contract line (r18, VERDICT r17 #1). The driver's
     * PERF adjudication has read `parsed: null` for 18 straight rounds: the
@@ -285,10 +225,9 @@ object Bench {
     * scalars placed AFTER the queries map so even a tail-truncated copy
     * still carries total/gate/window — printed as the FINAL stdout line.
     * The full-precision diagnostics JSON still ships, in
-    * bench_full_latest.json and bench_runs.jsonl (unchanged format), so
-    * nothing is lost to forensics. Failed queries stay -1 in the map, the
-    * same convention as the full artifact. Pure formatter, pinned by
-    * UnitSpecs. */
+    * bench_full_latest.json and bench_runs.jsonl, so nothing is lost to
+    * forensics. Failed queries stay -1 in the map, the same convention as
+    * the full artifact. Pure formatter, pinned by UnitSpecs. */
   def contractLine(total: Double, cpus: String, cpusDivergent: Boolean,
       heapReqGb: Double, heapDivergent: Boolean,
       queries: Seq[(String, Double, Boolean)],
@@ -300,12 +239,9 @@ object Bench {
     val qs = queries.map { case (k, v, ok) =>
       "\"" + k + "\":" + (if (ok) sec(v) else "-1.0")
     }.mkString("{", ",", "}")
-    val failed = queries.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val wf = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val ob = overBudget.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failed = jsonStrings(queries.collect { case (k, _, false) => k })
     s"""{"metric":"total","unit":"sec","queries":$qs,"failed":$failed,""" +
-      s""""warmup_failed":$wf,"over_budget":$ob,""" +
+      s""""warmup_failed":${jsonStrings(warmupFailed)},"over_budget":${jsonStrings(overBudget)},""" +
       s""""cpus":${cpusJson(cpus)},"cpus_divergent":$cpusDivergent,""" +
       s""""heap_req_gb":${sec(heapReqGb)},"heap_divergent":$heapDivergent,""" +
       s""""warmup_n":$warmupN,""" +
@@ -345,17 +281,16 @@ object Bench {
     // Default = the record config (r16): an unset env now yields a
     // gate-comparable capture instead of a silently divergent local[4] one.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", recordCpus.toString)
-    // tmpfs scratch for checkpoints/sinks/shuffle when available — the
-    // local-mode analogue of a cluster's fast local disks (see FastScratch)
-    val scratch = graft.engine.FastScratch.init()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    scratch.foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
+    val queries = SparkEntry.queries
+    /** Seconds for one `count()` of `key` at the target sf, or -1.0 when
+      * it throws. */
+    def timeQuery(key: String): Double = {
+      val fn = queries(key)
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case _: Throwable => -1.0 }
+    }
     // Untimed warmup on the smallest sf: initializes Hadoop FS, parquet
     // read AND write paths (committers), codegen, shuffle, window/join,
     // and streaming infrastructure once — so timed runs measure query
@@ -369,7 +304,7 @@ object Bench {
     val warmupFailed = scala.collection.mutable.ListBuffer[String]()
     Bench.warmupQueries
       .foreach { q =>
-        try SparkEntry.queries(q)(spark, warmSf).count()
+        try queries(q)(spark, warmSf).count()
         catch { case e: Throwable =>
           warmupFailed += q
           System.err.println(s"BENCH WARMUP FAILURE: $q — " +
@@ -381,34 +316,34 @@ object Bench {
     // In a fresh container that cache is cold at the TARGET sf, so the
     // timed q52 would measure the one-time layout write instead of the
     // shuffle-free join under test: materialize it untimed here.
-    try SparkEntry.queries("q52_bucketed_join")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    // Canary helper (see below). Timed canaries bracket the suite: the
-    // post-suite pair is the established host-mode signal, and the
-    // PRE-suite pair (r04-end) catches the other failure shape — a window
-    // that was already degraded when the suite STARTED but drained before
-    // the post-suite canaries ran (observed: totals inflated 10-20% with
-    // clean closing canaries). Both pairs are untimed w.r.t. the gate.
+    timeQuery("q52_bucketed_join")
+    // Canary: the median of 3 runs, -1.0 (and no further run) once one
+    // fails. Timed canaries bracket the suite: the post-suite pair is the
+    // established host-mode signal, and the PRE-suite pair (r04-end)
+    // catches the other failure shape — a window that was already degraded
+    // when the suite STARTED but drained before the post-suite canaries ran
+    // (observed: totals inflated 10-20% with clean closing canaries). Both
+    // pairs are untimed w.r.t. the gate.
     // Transparency note: running q28/q11 here ALSO warms them at the
     // target sf before their timed runs (≈0.05-0.1 s each) — the same
     // warm-session treatment the warmup list gives every declared query
     // (at sf0.001), now visible in the methodology instead of implicit.
-    def canaryOf(q: String): Double = try {
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted.apply(1)
-    } catch { case _: Throwable => -1.0 }
-    // A throwing query must NOT silently deflate the total: it is recorded
-    // as -1 in the per-query map AND listed under "failed", so a broken
-    // query can never make the perf gate look better.
+    def canaryOf(q: String): Double = {
+      val ts = Iterator.fill(3)(timeQuery(q)).takeWhile(_ >= 0).toSeq
+      if (ts.size == 3) ts.sorted.apply(1) else -1.0
+    }
     // A MID-RUN canary pair fires halfway through the timed loop (untimed
     // w.r.t. the gate): the pre/post bracket has twice recorded clean
     // endpoints around a contended MIDDLE (r06-late: one run's q100–q111
     // block inflated 3–10× while both bracket canaries read clean). Three
     // canary points make that failure shape visible in the JSON itself.
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+    val sorted = queries.keys.toSeq.sorted
+    // The pre-canary pair runs OUTSIDE timedPass since r15 so the
+    // start-restart policy (Bench.restartNeeded) can read the shuffle
+    // pre-canary BEFORE any query is timed; timedPass receives the pair
+    // and the timed loop itself is unchanged.
+    def preCanaries(): (Double, Double) =
+      (canaryOf("q28_topk_global"), canaryOf("q11_join_shuffle"))
     /** One timed pass over the full suite with its own canary bracket
       * (pre / mid / post, each pair trivial + shuffle-weight). Factored out
       * (r13, VERDICT r12 #4) so a gate-fail-in-degraded-window can append a
@@ -416,50 +351,22 @@ object Bench {
       * IMMEDIATELY after the loop (before any over-budget retimes) — in the
       * common empty-over_budget case this is byte-identical to the old
       * order, and when retimes do fire the post pair now reads the window
-      * the SUITE ended in, which is what it classifies. */
-    case class Pass(results: Seq[(String, Double, Boolean)],
-        pre: Double, shufflePre: Double, mid: Double, shuffleMid: Double,
-        post: Double, shufflePost: Double, wakeupJson: String) {
-      def total: Double = results.collect { case (_, v, true) => v }.sum
-      def qsJson: String = results.map { case (k, v, ok) =>
-        "\"" + k + "\":" + (if (ok) v else -1.0) }.mkString("{", ",", "}")
-      def failedJson: String = results.collect { case (k, _, false) =>
-        "\"" + k + "\"" }.mkString("[", ",", "]")
-      /** Host-window classification (r13, VERDICT r12 #4): the shuffle
-        * canary's clean floor on r12+ binaries is ~0.31–0.37 s and degraded
-        * windows read past the suspect line (SCALING.md §variance maps the
-        * pre-r12 0.45 line to ≈0.41 on this binary's scale). Tri-state
-        * JSON (r15, ADVICE r14 #2): "null" whenever ANY canary failed and
-        * no survivor read degraded — see Bench.windowDegradedJson. */
-      def windowDegradedJson: String =
-        Bench.windowDegradedJson(shufflePre, shuffleMid, shufflePost)
-    }
-    // The pre-canary pair runs OUTSIDE timedPass since r15 so the
-    // start-restart policy (Bench.restartNeeded) can read the shuffle
-    // pre-canary BEFORE any query is timed; timedPass receives the pair
-    // and the timed loop itself is unchanged.
-    def preCanaries(): (Double, Double) =
-      (canaryOf("q28_topk_global"), canaryOf("q11_join_shuffle"))
+      * the SUITE ended in, which is what it classifies. A query that
+      * throws reads -1.0, stays out of the total and is listed under
+      * `failed` (see passJson). */
     def timedPass(pre: Double, shufflePre: Double): Pass = {
-      // Wakeup-latency sampler (r16): runs for exactly the duration of the
-      // timed pass, so the banked histogram classifies THIS pass's window.
-      val sampler = new Bench.WakeupSampler().start()
       var mid = -1.0
       var shuffleMid = -1.0
-      val res = sorted.zipWithIndex.map { case ((name, fn), i) =>
+      val res = sorted.zipWithIndex.map { case (name, i) =>
         if (i == sorted.size / 2) {
           mid = canaryOf("q28_topk_global")
           shuffleMid = canaryOf("q11_join_shuffle")
         }
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        val t = timeQuery(name)
+        (name, t, t >= 0)
       }
-      val post = canaryOf("q28_topk_global")
-      val shufflePost = canaryOf("q11_join_shuffle")
-      val wakeup = sampler.stopJson()
-      System.err.println(s"BENCH WAKEUP: $wakeup")
-      Pass(res, pre, shufflePre, mid, shuffleMid, post, shufflePost, wakeup)
+      Pass(res, pre, shufflePre, mid, shuffleMid,
+        canaryOf("q28_topk_global"), canaryOf("q11_join_shuffle"))
     }
     // Pre-flight window probe (r14, VERDICT r13 #1): refuse to START a
     // gate capture in a window the shuffle canary already calls degraded —
@@ -507,15 +414,7 @@ object Bench {
       } else Capture(pf1, timedPass(pre1, spre1), None)
     }
     val firstCapture = capture()
-    val preflight = firstCapture.preflight
     val pass = firstCapture.pass
-    val results = pass.results
-    val canaryPre = pass.pre
-    val canaryShufflePre = pass.shufflePre
-    val canaryMid = pass.mid
-    val canaryShuffleMid = pass.shuffleMid
-    val qs = pass.qsJson
-    val failed = pass.failedJson
     val total = pass.total
     // Budget guard (SCALING.md §Bench budget): surface growth must not creep
     // toward the 90 s gate silently. Queries over the 3.5 s per-query budget
@@ -529,12 +428,11 @@ object Bench {
     // measured clean-mode average is ~0.65): an absolute number meant for
     // 110 queries would warn on every clean run at 120+ and train readers
     // to ignore it. The HARD gate stays absolute — it is the contract.
-    val softTotal = math.min(0.67 * SparkEntry.queries.size, 85.0)
+    val softTotal = math.min(0.67 * queries.size, 85.0)
     val hardTotal = 90.0
-    val overBudgetKeys = results.collect {
+    val overBudgetKeys = pass.results.collect {
       case (k, v, true) if v > perQueryBudget => k
     }
-    val overBudget = overBudgetKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val exceeded = total > hardTotal
     // Auto re-capture (r13, VERDICT r12 #4): the gate decision has been a
     // single sample on a documented-bimodal host — r12 failed at 90.3 s in
@@ -591,12 +489,7 @@ object Bench {
         Some(capture())
       } else None
     val recaptureJson = recapture.map { c =>
-      val p = c.pass
-      s"""{"value":${p.total},"queries":${p.qsJson},"failed":${p.failedJson},""" +
-        s""""canary_pre_sec":${p.pre},"canary_shuffle_pre_sec":${p.shufflePre},""" +
-        s""""canary_mid_sec":${p.mid},"canary_shuffle_mid_sec":${p.shuffleMid},""" +
-        s""""canary_sec":${p.post},"canary_shuffle_sec":${p.shufflePost},""" +
-        s""""window_degraded":${p.windowDegradedJson},"wakeup":${p.wakeupJson},""" +
+      s"""{"value":${c.pass.total},${passJson(c.pass)},""" +
         s""""preflight":${c.preflight.json},"restart":${c.restartJson}}"""
     }.getOrElse("null")
     // Over-budget re-time (r07, VERDICT r06 #4): a query over the per-query
@@ -619,31 +512,8 @@ object Bench {
     // retimes carry their own window classification.
     val canaryRetime =
       if (overBudgetKeys.isEmpty) -1.0 else canaryOf("q11_join_shuffle")
-    val retimed = overBudgetKeys.map { k =>
-      val t = try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(k)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-      "\"" + k + "\":" + t
-    }.mkString("{", ",", "}")
-    // Host-mode canary (SCALING.md §variance): this host is bimodal, and a
-    // stalled run inflates EVERY query ~uniformly. The post-suite trivial
-    // canary (global top-10 over 150k rows; ~0.2 s clean, ≥3× that stalled)
-    // records which mode this run ENDED in — measured inside the pass,
-    // immediately after the loop (see timedPass).
-    // -1 on any canary failure: the JSON line must survive a broken env
-    val canary = pass.post
-    // Second, shuffle-weight canary (r04-end): the trivial canary reads
-    // ~0.1–0.2 s in BOTH the clean mode and the milder degraded mode (only
-    // gross stalls move it), but a real shuffle workload discriminates.
-    // SCALE NOTE (r12): the canary is timed through SparkEntry.queries, so
-    // the Tables relation memo shifted its floor — clean reads ~0.31–0.37
-    // on r12+ binaries vs 0.39–0.41 across r04–r11 history; degraded
-    // windows read ~0.45+ (old scale ~0.5–1.25). Bucket cross-round canary
-    // comparisons by binary era (SCALING.md §variance). Untimed
-    // (post-suite), so it costs nothing against the gate.
-    val canaryShuffle = pass.shufflePost
+    val retimed = overBudgetKeys.map(k => "\"" + k + "\":" + timeQuery(k))
+      .mkString("{", ",", "}")
     // COLD re-time (r09, VERDICT r08 #3 — the ADVICE r07 carry-over): the
     // warm `retimed` above runs with every long-lived cache alive, so it
     // can EXONERATE a host-window spike but cannot CONFIRM a structural
@@ -661,19 +531,11 @@ object Bench {
     // up front, the first key of a cache-sharing family (e.g. the graph
     // edge aggregate) repopulated the cache and every later family member
     // retimed WARM while being reported as cold.
-    val retimedCold = if (overBudgetKeys.isEmpty) "{}" else {
-      overBudgetKeys.map { k =>
-        graft.engine.CacheReaper.release()
-        graft.engine.Tables.clearSchemaCache()
-        val t = try {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(k)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        "\"" + k + "\":" + t
-      }.mkString("{", ",", "}")
-    }
-    val warmFailedJson = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val retimedCold = overBudgetKeys.map { k =>
+      graft.engine.CacheReaper.release()
+      graft.engine.Tables.clearSchemaCache()
+      "\"" + k + "\":" + timeQuery(k)
+    }.mkString("{", ",", "}")
     // cpus/heap in the record (r07): a local[4]-vs-local[32] run is a 2x
     // total difference that canaries cannot flag — the run must carry its
     // own execution mode for post-hoc forensics.
@@ -720,15 +582,21 @@ object Bench {
     // tail-kept stdout artifact every round since r01 (`parsed: null`),
     // so stdout now carries the compact contract line below instead and
     // this line ships via bench_full_latest.json + bench_runs.jsonl
-    // (same format as always, plus warmup_n — ADVICE r17 #3: the warmup-
-    // list version must be machine-detectable for cross-round
-    // comparability).
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${Bench.cpusJson(cpus)},"cpus_divergent":$cpuDivergent,"heap_gb":$heapGb,"heap_req_gb":$xmxReqGb,"heap_divergent":$heapDivergent,"warmup_n":${Bench.warmupQueries.size},"queries":$qs,"failed":$failed,"warmup_failed":$warmFailedJson,"over_budget":$overBudget,"canary_retime_sec":$canaryRetime,"retimed":$retimed,"retimed_cold":$retimedCold,"soft_budget_sec":$softTotal,"budget_exceeded":$exceeded,"canary_pre_sec":$canaryPre,"canary_shuffle_pre_sec":$canaryShufflePre,"canary_mid_sec":$canaryMid,"canary_shuffle_mid_sec":$canaryShuffleMid,"canary_sec":$canary,"canary_shuffle_sec":$canaryShuffle,"window_degraded":${pass.windowDegradedJson},"wakeup":${pass.wakeupJson},"canary_suspect_line_sec":${Bench.canarySuspectLine},"preflight":${preflight.json},"restart":${firstCapture.restartJson},"recapture":$recaptureJson,"sf":"$sfDir"}"""
+    // (warmup_n, ADVICE r17 #3: the warmup-list version must be
+    // machine-detectable for cross-round comparability).
+    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpusJson(cpus)},""" +
+      s""""cpus_divergent":$cpuDivergent,"heap_gb":$heapGb,"heap_req_gb":$xmxReqGb,""" +
+      s""""heap_divergent":$heapDivergent,"warmup_n":${warmupQueries.size},${passJson(pass)},""" +
+      s""""warmup_failed":${jsonStrings(warmupFailed.toSeq)},"over_budget":${jsonStrings(overBudgetKeys)},""" +
+      s""""canary_retime_sec":$canaryRetime,"retimed":$retimed,"retimed_cold":$retimedCold,""" +
+      s""""soft_budget_sec":$softTotal,"budget_exceeded":$exceeded,""" +
+      s""""canary_suspect_line_sec":$canarySuspectLine,"preflight":${firstCapture.preflight.json},""" +
+      s""""restart":${firstCapture.restartJson},"recapture":$recaptureJson,"sf":"$sfDir"}"""
     // Truncation-proof headline (r15, VERDICT r14 #1), now printed BEFORE
     // the contract line: the contract line itself is the final stdout
     // line since r18. Mirrored to stderr for log forensics.
     val summary = Bench.summaryLine(total, exceeded, pass.windowDegradedJson,
-      preflight.waitedSec, firstCapture.restart.isDefined,
+      firstCapture.preflight.waitedSec, firstCapture.restart.isDefined,
       recapture.map(_.pass.total), cpuDivergent)
     println(summary)
     System.err.println(summary)
@@ -762,13 +630,13 @@ object Bench {
       // "gate-failure" (r15, ADVICE r14 #4): the r14-late trigger widened
       // to ANY hard-gate failure, including all-clean-canary windows — the
       // log text now matches its own trigger.
-      System.err.println(f"BENCH BUDGET FAILURE: total $total%.1f s exceeds the $hardTotal%.0f s gate (canary $canary%.2f s)" +
+      System.err.println(f"BENCH BUDGET FAILURE: total $total%.1f s exceeds the $hardTotal%.0f s gate (canary ${pass.post}%.2f s)" +
         recapture.map { c =>
           f"; gate-failure auto re-capture read ${c.pass.total}%.1f s " +
             f"(window_degraded=${c.pass.windowDegradedJson}, " +
             f"preflight_waited=${c.preflight.waitedSec}%.0f s)" }.getOrElse(""))
     else if (total > softTotal)
-      System.err.println(f"BENCH BUDGET WARNING: total $total%.1f s exceeds the $softTotal%.0f s soft budget (gate $hardTotal%.0f s, canary $canary%.2f s)")
+      System.err.println(f"BENCH BUDGET WARNING: total $total%.1f s exceeds the $softTotal%.0f s soft budget (gate $hardTotal%.0f s, canary ${pass.post}%.2f s)")
     // Session-end release of the library's long-lived caches (r07, ADVICE
     // r06 #1): the cross-query reuse (the graph family shares one edge
     // cache) is deliberate DURING the run; the bound is this hook.
@@ -782,7 +650,7 @@ object Bench {
     // the sbt `[info] ` prefix that made every prior round's stdout line
     // unparseable as bare JSON).
     println(Bench.contractLine(total, cpus, cpuDivergent, xmxReqGb,
-      heapDivergent, results, warmupFailed.toSeq, overBudgetKeys,
+      heapDivergent, pass.results, warmupFailed.toSeq, overBudgetKeys,
       exceeded, pass.windowDegradedJson, Bench.warmupQueries.size,
       recapture.map(_.pass.total), sfDir))
     spark.stop()

@@ -31,4 +31,20 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+
+  /** The local session the driver programs (Bench, Verify, Probe) run on:
+    * `local[cpus]` with as many shuffle partitions, UTC, no UI, WARN logs,
+    * and shuffle/spill on tmpfs scratch when available (see FastScratch). */
+  def localSession(cpus: String): SparkSession = {
+    val scratch = graft.engine.FastScratch.init()
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    scratch.foreach(d => builder.config("spark.local.dir", d))
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

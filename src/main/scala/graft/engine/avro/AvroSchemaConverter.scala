@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.GenericRecord
-import org.apache.avro.util.Utf8
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -152,12 +151,6 @@ object AvroSchemaConverter {
       case other => throw new IllegalArgumentException(
         s"unsupported Avro logical type: $other")
     }
-  }
-
-  /** Utf8-safe string accessor for tests/fixtures. */
-  def asString(v: Any): String = v match {
-    case u: Utf8 => u.toString
-    case s => String.valueOf(s)
   }
 
   // --------------------------------------------------------------------

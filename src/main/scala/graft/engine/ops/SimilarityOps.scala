@@ -310,8 +310,8 @@ object SimilarityOps {
   // buckets, the collision candidate set, and the rounded-decimal re-rank
   // — no-oracle set 7 → 6 (what remains is the theoretically engine-bound
   // set: HLL/percentile sketches, the two engine samplers, the q42 stream
-  // runtime). The xxhash64-plane srpTopK stays the library default;
-  // exactness vs q33's brute force also asserted in the test suite.
+  // runtime). Exactness vs q33's brute force is also asserted in the test
+  // suite.
   private val q63 = {
     val buckets = (0 until 8).map(t =>
       s"${graft.operators.Similarity.srpBucketSql("e", t, 6, 64)} AS b$t").mkString(", ")

@@ -186,16 +186,6 @@ object GraftFunctions {
       minPerm(193, 71) * 1000000007L + minPerm(389, 113))
   }
 
-  /** Native codegen integer-key extraction from a flat JSON object
-    * column — `get_json_object(json, s"$$.$key").cast("long")` semantics
-    * on integral values without the per-row Jackson parse (contract in
-    * [[graft.engine.expr.JsonIntKey]]). */
-  def jsonIntKey(json: Column, key: String): Column = JsonIntKey.of(json, key)
-
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(split(text, " "))
-
-  /** BPE-ish regex token count (shared-dialect pattern). */
-  def regexTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
 }

@@ -46,71 +46,14 @@ object Similarity {
       .select("probe_id", "rn", "neighbor_id", "sim")
   }
 
-  /** Approximate top-k via signed-random-projection (SRP) LSH.
-    *
-    * `tables × bitsPerTable` hyperplanes are derived DETERMINISTICALLY from
-    * xxhash64(plane, dim) (sign of a dot is scale-invariant, so the
-    * pseudo-random values need no normalization). Every vector hashes to
-    * one bucket per table (the sign-bit word of its dots); probes search
-    * only vectors sharing ≥1 bucket, then exact-cosine re-rank. At scale:
-    * corpus bucketing is one broadcast join + one shuffle, search touches
-    * O(candidates) not O(corpus).
-    */
-  def srpTopK(vectors: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, k: Int, tables: Int = 8, bitsPerTable: Int = 6,
-      dim: Int = 0): DataFrame = {
-    val spark = vectors.sparkSession
-    DotProduct.register(spark)
-    val nPlanes = tables * bitsPerTable
-    // dim<=0 → derive from the data (one tiny metadata-scale job). A wrong
-    // dim no longer degrades silently either way: DotProduct raises on any
-    // length mismatch with the generated hyperplanes.
-    val planeDim =
-      if (dim > 0) dim
-      else vectors.select(size(col(vecCol)).as("d")).head().getInt(0)
-    val planes = spark.range(nPlanes).select(col("id").as("plane"),
-      // double literals (500.5D): plain 500.5 parses as DECIMAL and would
-      // silently turn the plane arrays into array<decimal>
-      expr(s"transform(sequence(0, ${planeDim - 1}), d -> cast(pmod(xxhash64(id, d), 1001) AS DOUBLE) / 500.5D - 1.0D)").as("h"))
-    def buckets(df: DataFrame): DataFrame = {
-      val withBits = withNorm(df, idCol, vecCol)
-        .crossJoin(broadcast(planes))
-        .select(col("__id"), col("__e"), col("__nrm"), col("plane"),
-          (DotProduct.dot(col("__e"), col("h")) >= 0).cast("long").as("bit"))
-      val aggs = Seq(first(col("__e")).as("__e"), first(col("__nrm")).as("__nrm")) ++
-        (0 until tables).map { t =>
-          sum(when(expr(s"plane div $bitsPerTable") === t,
-            expr(s"shiftleft(bit, cast(plane % $bitsPerTable AS INT))"))
-            .otherwise(0L)).as(s"bk$t")
-        }
-      withBits
-        .groupBy("__id")
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("__id"), col("__e"), col("__nrm"),
-          posexplode(array((0 until tables).map(t => col(s"bk$t")): _*))
-            .as(Seq("table", "bucket")))
-    }
-    val corpus = buckets(vectors)
-    val probeB = buckets(probes).select(col("__id").as("__pid"),
-      col("__e").as("__pe"), col("__nrm").as("__pn"), col("table"), col("bucket"))
-    val w = Window.partitionBy("probe_id").orderBy(col("sim").desc, col("neighbor_id"))
-    corpus.join(probeB, Seq("table", "bucket"))
-      .where(col("__id") =!= col("__pid"))
-      .select(col("__pid").as("probe_id"), col("__id").as("neighbor_id"),
-        cosine(col("__pe"), col("__e"), col("__pn"), col("__nrm")).as("sim"))
-      .distinct() // a pair may collide in several tables
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select("probe_id", "rn", "neighbor_id", "sim")
-  }
-
-  /** Portable-plane variant of [[srpTopK]] (oracle-checkable, r04): table
-    * buckets come from the integer-arithmetic SRP planes ([[srpBuckets]] —
-    * the q34/q49 machinery) instead of xxhash64 planes, candidates from
-    * bucket collisions, exact rounded-decimal cosine re-rank. The xxhash64
-    * variant stays the library default (finer plane dispersion); this one
-    * trades plane quality for engine portability — IDENTICALLY in any
-    * engine, which is what lets q63 carry a full DuckDB oracle. */
+  /** Approximate top-k via signed-random-projection (SRP) LSH with
+    * engine-portable planes (oracle-checkable, r04): table buckets come
+    * from the integer-arithmetic SRP planes ([[srpBuckets]] — the q34/q49
+    * machinery), candidates from bucket collisions, exact rounded-decimal
+    * cosine re-rank. Probes search only vectors sharing ≥1 bucket, so
+    * search touches O(candidates), not O(corpus). The planes compute
+    * IDENTICALLY in any engine, which is what lets q63 carry a full
+    * DuckDB oracle. */
   def srpTopKPortable(vectors: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int, tables: Int = 8, bitsPerTable: Int = 6,
       dim: Int = 0): DataFrame = {
@@ -186,8 +129,7 @@ object Similarity {
   }
 
   // ---- Engine-portable SRP blocking (oracle-checkable) -------------------
-  // Unlike srpTopK's xxhash64 hyperplanes (Spark-internal, rows-only
-  // checked), these planes are plain int64 arithmetic any engine reproduces
+  // The planes are plain int64 arithmetic any engine reproduces
   // bit-for-bit — so SRP-blocked operators keep a DuckDB oracle:
   //   w_j[i] = (i * (2j+3) * 2654435761) % 1000003 - 500001   (i = 1..dim)
   // Bucket of table t = the bitsPerTable sign bits of planes

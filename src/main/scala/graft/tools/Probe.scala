@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.io.{FileDescriptor, FileOutputStream, PrintStream}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -52,17 +54,11 @@ object Probe {
     "plans" -> Set("--sf", "--keys", "--out", "--suffix"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val scratch = graft.engine.FastScratch.init()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    scratch.foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try run(spark, args.toSeq, println) finally spark.stop()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    // UTF-8 whatever the platform charset, so `rescan=<table>×n` keeps its ×.
+    val stdout = new PrintStream(new FileOutputStream(FileDescriptor.out), true,
+      StandardCharsets.UTF_8)
+    try run(spark, args.toSeq, stdout.println) finally spark.stop()
   }
 
   private def bad(why: String): Nothing =

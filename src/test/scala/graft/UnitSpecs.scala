@@ -494,39 +494,21 @@ class BenchPreflightSpec extends AnyFunSuite {
   }
 }
 
-/** Wakeup-latency sampler pins (r16): the histogram/quantile/JSON math is
-  * pure and pinned without threads. The sampler converts SCALING.md
-  * §variance's by-hand sleep-overshoot adjudication into an in-artifact
-  * measurement; the window classifier stays canary-based. */
-class BenchWakeupSpec extends AnyFunSuite {
-  test("bucket edges: clean floor, millisecond class, and overflow land apart") {
-    assert(Bench.wakeupBucket(0.0) === 0)
-    assert(Bench.wakeupBucket(0.2) === 0, "upper bounds are inclusive")
-    assert(Bench.wakeupBucket(0.21) === 1)
-    assert(Bench.wakeupBucket(1.0) === 2)
-    assert(Bench.wakeupBucket(3.5) === 4)
-    assert(Bench.wakeupBucket(9.9) === 5)
-    assert(Bench.wakeupBucket(100.0) === Bench.wakeupBoundsMs.length, "overflow bucket")
-  }
-  test("quantiles are conservative bucket upper bounds; overflow reports the max") {
-    // 98 clean samples, one in (1,2], one in the overflow bucket.
-    val counts = Array[Long](98, 0, 0, 1, 0, 0, 0, 1)
-    assert(Bench.wakeupQuantileMs(counts, 0.50, 102.1) === 0.2)
-    assert(Bench.wakeupQuantileMs(counts, 0.99, 102.1) === 2.0)
-    assert(Bench.wakeupQuantileMs(counts, 1.00, 102.1) === 102.1)
-    assert(Bench.wakeupQuantileMs(Array.fill(8)(0L), 0.5, 0.0) === -1.0,
-      "no samples must read -1, never a fake clean 0")
-  }
-  test("JSON carries sample count, conservative p50/p99, max, and the over-1ms count") {
-    val counts = Array[Long](98, 0, 0, 1, 0, 0, 0, 1)
-    assert(Bench.wakeupJson(counts, 102.125) ===
-      """{"samples":100,"p50_ms":0.200,"p99_ms":2.000,"max_ms":102.125,"over_1ms":2}""")
-    assert(Bench.wakeupJson(Array.fill(8)(0L), 0.0) === """{"samples":0}""")
-  }
-  test("over_1ms counts only buckets entirely past the millisecond line") {
-    // bucket 2 covers (0.5, 1.0] — at or under 1 ms, must NOT count.
-    val counts = Array[Long](0, 0, 5, 3, 0, 0, 0, 0)
-    assert(Bench.wakeupJson(counts, 1.9).contains(""""over_1ms":3"""))
+/** Per-pass fields of the full artifact: one renderer for the top-level
+  * line and its `recapture` object. A failed query or canary must read
+  * -1.0, never a number that could flatter the total or the window. */
+class BenchPassJsonSpec extends AnyFunSuite {
+  test("a failed key renders -1.0 and is listed under failed; a -1 canary renders -1.0") {
+    val p = Bench.Pass(Seq(("q01_a", 1.25, true), ("q02_b", -1.0, false)),
+      pre = 0.2, shufflePre = -1.0, mid = 0.21, shuffleMid = 0.33,
+      post = 0.19, shufflePost = 0.35)
+    val j = Bench.passJson(p)
+    assert(j === """"queries":{"q01_a":1.25,"q02_b":-1.0},"failed":["q02_b"],""" +
+      """"canary_pre_sec":0.2,"canary_shuffle_pre_sec":-1.0,""" +
+      """"canary_mid_sec":0.21,"canary_shuffle_mid_sec":0.33,""" +
+      """"canary_sec":0.19,"canary_shuffle_sec":0.35,"window_degraded":null""")
+    assert(p.total === 1.25)
+    assert(!j.contains("wakeup"))
   }
 }
 
