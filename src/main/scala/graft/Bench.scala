@@ -307,7 +307,7 @@ object Bench {
         try queries(q)(spark, warmSf).count()
         catch { case e: Throwable =>
           warmupFailed += q
-          System.err.println(s"BENCH WARMUP FAILURE: $q — " +
+          System.err.println(s"BENCH WARMUP FAILURE: $q - " +
             String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(e.toString))
         }
       }
@@ -405,7 +405,7 @@ object Bench {
       val (pre1, spre1) = preCanaries()
       if (Bench.restartNeeded(pf1.startedDegraded, spre1)) {
         System.err.println(f"BENCH RESTART: shuffle pre-canary $spre1%.2f s " +
-          "contradicts a verified-clean preflight probe — aborting before any " +
+          "contradicts a verified-clean preflight probe - aborting before any " +
           "query is timed, re-entering the preflight wait (one-shot; both " +
           "attempts disclosed in the artifact)")
         val pf2 = preflightProbe()
@@ -569,12 +569,12 @@ object Bench {
     val heapDivergent = xmxReqGb > 16.01 || xmxReqGb < 10
     if (heapDivergent)
       System.err.println(f"BENCH HEAP DIVERGENCE: requested -Xmx $xmxReqGb%.1f GiB " +
-        "vs the measured-optimal 16g clamp — timings are not comparable to " +
+        "vs the measured-optimal 16g clamp - timings are not comparable to " +
         "the committed record config; see build.sbt clampHeap and SCALING.md")
     val cpuDivergent = Bench.cpusDivergent(cpus)
     if (cpuDivergent)
       System.err.println(s"BENCH CPUS DIVERGENCE: running local[$cpus] vs the " +
-        s"record config local[${Bench.recordCpus}] — timings are not comparable " +
+        s"record config local[${Bench.recordCpus}] - timings are not comparable " +
         "to the era baselines (ADVICE r15 #1); unset SPARK_GRAFT_CPUS or set " +
         s"it to ${Bench.recordCpus} for a gate-grade capture")
     // Full-precision diagnostics JSON — FILE artifacts only since r18

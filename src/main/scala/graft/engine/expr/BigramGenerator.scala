@@ -1,6 +1,6 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -48,9 +48,8 @@ case class BigramGenerator(child: Expression)
 }
 
 object BigramGenerator {
-  /** Register `bigrams(array<string>)` as a session temp function so it is
-    * usable from selectExpr / SQL like any built-in generator. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams", exprs => BigramGenerator(exprs.head), "built-in")
+  /** Column-level API: one `bigram` row per consecutive token pair. */
+  def of(tokens: Column): Column =
+    org.apache.spark.sql.GraftShims.column(
+      BigramGenerator(org.apache.spark.sql.GraftShims.expression(tokens)))
 }

@@ -1,6 +1,6 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,9 +83,4 @@ object DotProduct {
     org.apache.spark.sql.GraftShims.column(
       DotProduct(org.apache.spark.sql.GraftShims.expression(a),
         org.apache.spark.sql.GraftShims.expression(b)))
-
-  /** Register `dot_product(array<double>, array<double>)` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
 }

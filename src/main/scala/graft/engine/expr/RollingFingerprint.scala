@@ -1,6 +1,6 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,20 +77,4 @@ object RollingFingerprint {
   def of(c: Column, limit: Int = -1): Column =
     org.apache.spark.sql.GraftShims.column(
       RollingFingerprint(org.apache.spark.sql.GraftShims.expression(c), limit))
-
-  /** The ONE arity-dispatching builder for `rolling_fingerprint(text[,
-    * limit])` — shared by [[register]] and `GraftExtensions`'s
-    * injectFunction so the two registration paths cannot diverge. */
-  def builder(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(e) => RollingFingerprint(e, -1)
-    case Seq(e, lim) => RollingFingerprint(e,
-      lim.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException(
-      "rolling_fingerprint(text[, limit])")
-  }
-
-  /** Register `rolling_fingerprint(text[, limit])` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_fingerprint", builder, "built-in")
 }

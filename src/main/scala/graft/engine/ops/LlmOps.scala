@@ -217,17 +217,17 @@ object LlmOps {
   }
 
   // --- q37: bigram generation via a custom Catalyst Generator (UDTF) ------
-  // BigramGenerator emits one row per consecutive token pair — registered
-  // as `bigrams(...)` and invoked through SQL like any built-in generator.
+  // BigramGenerator emits one row per consecutive token pair, selected
+  // through its Column API like any built-in generator.
   private val q37 = QueryDef(
     "q37_text_bigrams",
     """SELECT lang, z[1] || ' ' || z[2] AS bigram, COUNT(*) AS n
       |FROM (SELECT lang, unnest(list_zip(l[1:len(l)-1], l[2:])) AS z
       |      FROM (SELECT lang, string_split(text, ' ') AS l FROM documents) t) u
       |GROUP BY lang, bigram ORDER BY n DESC, lang, bigram LIMIT 50""".stripMargin) { (s, dir) =>
-    graft.engine.expr.BigramGenerator.register(s)
     Tables.table(s, dir, "documents")
-      .selectExpr("lang", "bigrams(split(text, ' ')) AS bigram")
+      .select(col("lang"),
+        graft.engine.expr.BigramGenerator.of(split(col("text"), " ")).as("bigram"))
       .groupBy("lang", "bigram")
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("lang"), col("bigram")).limit(50)

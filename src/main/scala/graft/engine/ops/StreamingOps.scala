@@ -19,8 +19,9 @@ import graft.engine.{QueryDef, Tables}
  */
 object StreamingOps {
 
-  /** Run `body` with the state-store/shuffle partition count sized to the
-    * STATE volume, not the corpus (the CC shufflePartitions principle).
+  /** State-store/shuffle partition count for the stateful stream keys,
+    * sized to the STATE volume, not the corpus (the CC shufflePartitions
+    * principle).
     *
     * A stateful query's state partitioning = `spark.sql.shuffle.partitions`
     * at FIRST batch (then pinned in the checkpoint). Every micro-batch
@@ -28,23 +29,18 @@ object StreamingOps {
     * per partition), so an oversized count is pure fixed overhead per batch
     * — empty state-store tasks still pay scheduling and commit — and an
     * undersized one caps parallelism at scale. It is therefore a
-    * deliberate knob, not an inherited batch setting: sized here for the
+    * deliberate setting, not an inherited batch one: sized here for the
     * local bench volume; a 100 TB deployment sets it to O(executor cores)
-    * once at checkpoint creation, and the knob goes UP with the state like
-    * any shuffle. Retuned by measurement each time the data or host
-    * shifts (`graft.tools.Probe run --ab spark.graft.stream.statePartitions=N`
-    * A/Bs it): r06 on the q85 shape at sf0.1, warm, 8 parts 2.7 s, 4 parts
-    * 1.9 s, 2 parts 1.8 s, so 8→4; r07 4→2 (per-query wall 2.2→2.0 s; state
-    * at sf0.1 is a few thousand rows). */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    * once at checkpoint creation, and it goes UP with the state like any
+    * shuffle. Measured: r06 on the q85 shape at sf0.1, warm, 8 parts
+    * 2.7 s, 4 parts 1.9 s, 2 parts 1.8 s, so 8→4; r07 4→2 (per-query wall
+    * 2.2→2.0 s; state at sf0.1 is a few thousand rows). */
+  private val StatePartitions = 2
+
+  /** Run `body` with [[StatePartitions]] shuffle partitions. */
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // Conf override (r18): the deliberate deployment knob made visible as
-    // a session conf so `Probe run --ab` can A/B it without editing
-    // builders — a 100 TB checkpoint sets it to O(executor cores) at
-    // creation; the local default stays the measured optimum passed in.
-    val eff = s.conf.getOption("spark.graft.stream.statePartitions")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(n)
-    s.conf.set("spark.sql.shuffle.partitions", eff.toString)
+    s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -67,7 +63,7 @@ object StreamingOps {
                              outputMode: String): DataFrame = {
     val target = java.nio.file.Files.createTempDirectory(s"${key}_sink").toString + "/out"
     val writeMode = if (outputMode == "complete") "overwrite" else "append"
-    withStatePartitions(s, 2) {
+    withStatePartitions(s) {
       stream.writeStream
         .outputMode(outputMode)
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -313,7 +309,7 @@ object StreamingOps {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), min(col("profile_n")).as("profile_n"))
     val target = java.nio.file.Files.createTempDirectory("q73_sink").toString + "/out"
-    withStatePartitions(s, 2) {
+    withStatePartitions(s) {
       val query = enriched.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, _: Long) =>

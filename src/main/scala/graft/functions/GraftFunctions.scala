@@ -12,10 +12,11 @@ import graft.engine.expr.{ArrayEqCount, ArrayPairs, BigramGenerator,
 /**
  * Column-level function facade (library API): the engine's reusable scalar
  * / generator functions in one place. `registerAll` makes the SQL names
- * (`dot_product`, `bigrams`, `rolling_fingerprint`, `hashed_shingles`,
- * `lcg_min`, `window_hashes`, `simhash_pack`, `bucket_pair_dots`,
- * `array_pairs`, `array_eq_count`, `sum128`, `square_sum128`) available
- * in a session; the Column APIs work without registration.
+ * (`dot_product`, `bigrams`, `rolling_fingerprint`, `json_int_key`,
+ * `hashed_shingles`, `lcg_min`, `window_hashes`, `simhash_pack`,
+ * `bucket_pair_dots`, `array_pairs`, `array_eq_count`, `sum128`,
+ * `square_sum128`) available in a session; the Column APIs work without
+ * registration.
  */
 object GraftFunctions {
 
@@ -25,12 +26,8 @@ object GraftFunctions {
       s"$what must be an integer literal, got $other")
   }
 
-  /** The ONE name → builder registry for the whole SQL surface, shared by
-    * [[registerAll]] (runtime, pre-built sessions) and `GraftExtensions`'s
-    * injectFunction (`spark.sql.extensions`, session build time) so the
-    * two registration paths cannot diverge — the same rule
-    * `RollingFingerprint.builder` established for its one function,
-    * generalized. */
+  /** Name → builder for every graft SQL function; [[registerAll]] is the
+    * one place that registers them. */
   private[graft] val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "dot_product" -> {
       case Seq(a, b) => DotProduct(a, b)
@@ -38,7 +35,10 @@ object GraftFunctions {
     "bigrams" -> {
       case Seq(e) => BigramGenerator(e)
       case _ => throw new IllegalArgumentException("bigrams(tokens)") },
-    "rolling_fingerprint" -> (RollingFingerprint.builder _),
+    "rolling_fingerprint" -> {
+      case Seq(e) => RollingFingerprint(e, -1)
+      case Seq(e, lim) => RollingFingerprint(e, lim.eval().asInstanceOf[Number].intValue())
+      case _ => throw new IllegalArgumentException("rolling_fingerprint(text[, limit])") },
     "json_int_key" -> {
       case Seq(e, k) =>
         // foldable guard (r11 review finding): eval() on a non-literal

@@ -21,19 +21,6 @@ import org.apache.spark.sql.expressions.Window
  */
 object Quality {
 
-  /** Percentile column for the robust-stats ops: exact sort-based by
-    * default (bit-portable cross-engine — the oracle-carried path), or
-    * the t-digest sketch (`approx_percentile`, accuracy 10⁴) when
-    * `approx` — the 100 TB path where a per-group sort of the full
-    * column is the dominating cost. Two semantic deltas in approx mode:
-    * the sketch returns an ACTUAL data value (nearest rank — exact
-    * percentile interpolates), and sketch results are engine-internal
-    * (like q23/q69) — so approx mode is for production thresholds, not
-    * oracle comparison. */
-  private def pct(valueCol: String, p: Double, approx: Boolean): Column =
-    if (approx) expr(s"approx_percentile($valueCol, ${p}d, 10000)")
-    else expr(s"percentile($valueCol, ${p}d)")
-
   /** Rows whose squared deviation from their group mean exceeds z² × the
     * population variance — the |z-score| > z outlier rule computed without
     * a float stddev. Appends exact `score` = dev²·n and `bound` = z²·Σdev²
@@ -183,13 +170,12 @@ object Quality {
     * computed at decimal scale 3 with NO downscale cast (DuckDB's
     * decimal downscale truncates where Spark's rounds); the exact decimal
     * comparison decides membership. Appends `fence_lo`/`fence_hi`. */
-  def iqrOutliers(df: DataFrame, groupCol: String, valueCol: String,
-      approx: Boolean = false): DataFrame = {
+  def iqrOutliers(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val q = df.groupBy(groupCol)
       .agg(
-        round(pct(valueCol, 0.25, approx), 2)
+        round(expr(s"percentile($valueCol, 0.25d)"), 2)
           .cast("decimal(18,2)").as("__p25"),
-        round(pct(valueCol, 0.75, approx), 2)
+        round(expr(s"percentile($valueCol, 0.75d)"), 2)
           .cast("decimal(18,2)").as("__p75"))
     val iqr = (col("__p75") - col("__p25")).cast("decimal(18,2)")
     val f = q.select(col(groupCol),
@@ -257,16 +243,14 @@ object Quality {
 
   /** Winsorized statistics per group: clamp `valueCol` into the exact
     * [pLo, pHi] percentiles (rounded to 2dp — the q58 cross-engine parity
-    * recipe) and report n, clip counts, and the winsorized decimal mean.
-    * At very large scale swap the exact percentile for approx_percentile;
-    * the clamp pass is unchanged. */
+    * recipe) and report n, clip counts, and the winsorized decimal mean. */
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
-      pLo: Double, pHi: Double, approx: Boolean = false): DataFrame = {
+      pLo: Double, pHi: Double): DataFrame = {
     val q = df.groupBy(groupCol)
       .agg(
-        round(pct(valueCol, pLo, approx), 2)
+        round(expr(s"percentile($valueCol, ${pLo}d)"), 2)
           .cast("decimal(18,2)").as("__p_lo"),
-        round(pct(valueCol, pHi, approx), 2)
+        round(expr(s"percentile($valueCol, ${pHi}d)"), 2)
           .cast("decimal(18,2)").as("__p_hi"))
     val clamped = least(greatest(col(valueCol).cast("decimal(18,6)"),
       col("__p_lo").cast("decimal(18,6)")), col("__p_hi").cast("decimal(18,6)"))

@@ -16,13 +16,9 @@ object Similarity {
 
   /** vectors normalized with an L2-norm column attached; `vecCol` must be
     * array<float> or array<double>. */
-  private def withNorm(df: DataFrame, idCol: String, vecCol: String,
-      extra: Seq[String] = Nil): DataFrame = {
-    val base = df.select((Seq(col(idCol).as("__id"),
-      col(vecCol).cast("array<double>").as("__e")) ++ extra.map(col)): _*)
-    DotProduct.register(df.sparkSession)
-    base.withColumn("__nrm", expr("sqrt(dot_product(__e, __e))"))
-  }
+  private def withNorm(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__e"))
+      .withColumn("__nrm", sqrt(DotProduct.dot(col("__e"), col("__e"))))
 
   /** Rounded decimal cosine between the pre-normalized internal columns. */
   private def cosine(ea: Column, eb: Column, na: Column, nb: Column): Column =
@@ -94,16 +90,15 @@ object Similarity {
     * neighbor_id, sim DECIMAL(7,4)) like [[cosineTopK]]. */
   def ivfTopK(vectors: DataFrame, probes: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    DotProduct.register(vectors.sparkSession)
     val emb = vectors
       .select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("e"))
-      .withColumn("nrm", expr("sqrt(dot_product(e, e))"))
+      .withColumn("nrm", sqrt(DotProduct.dot(col("e"), col("e"))))
     // inverted lists: one row per vector (broadcast centroids, map-side)
     val cells = Clustering.assign(vectors, idCol, vecCol, centroids)
       .select(col(idCol).as("neighbor_id"), col("cluster").as("cell"))
     val p = probes
       .select(col(idCol).as("probe_id"), col(vecCol).cast("array<double>").as("pe"))
-      .withColumn("pn", expr("sqrt(dot_product(pe, pe))"))
+      .withColumn("pn", sqrt(DotProduct.dot(col("pe"), col("pe"))))
     // coarse: the probe's nprobe nearest cells under the same metric
     val d2 = DotProduct.dot(col("pe"), col("pe")) -
       lit(2d) * DotProduct.dot(col("pe"), col("cv")) +
@@ -121,7 +116,7 @@ object Similarity {
       .join(emb, "neighbor_id")
       .where(col("neighbor_id") =!= col("probe_id"))
       .withColumn("sim",
-        round(expr("dot_product(pe, e)") / (col("pn") * col("nrm")), 4)
+        round(DotProduct.dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 4)
           .cast("decimal(7,4)"))
       .withColumn("rn", row_number().over(wFine))
       .where(col("rn") <= k)
@@ -249,29 +244,5 @@ object Similarity {
       .where(col("sim") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("sim"))
       .dropDuplicates("doc_a", "doc_b")
-  }
-
-  /** Pairs within a block whose rounded cosine meets `threshold` —
-    * quadratic only inside each block (LSH/label blocking pattern). Same
-    * grouped-generator shape as [[srpBandedPairs]]: the block shuffles
-    * once as one array row, pairs exist only as narrow generator output,
-    * and `bucketCap` bounds the collected row to the block's smallest ids
-    * (see srpBandedPairs — same degenerate-block rationale).
-    * Output: (block, doc_a, doc_b, sim). */
-  def blockedPairs(vectors: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double, bucketCap: Int = 256): DataFrame = {
-    val n = withNorm(vectors, idCol, vecCol, Seq(blockCol))
-    val wCap = Window.partitionBy(blockCol).orderBy("__id")
-    n.withColumn("__rk", row_number().over(wCap))
-      .where(col("__rk") <= bucketCap)
-      .groupBy(col(blockCol))
-      .agg(collect_list(struct(col("__id"), col("__e"), col("__nrm"))).as("xs"))
-      .select(col(blockCol),
-        graft.engine.expr.BucketPairDots.of(col("xs"))
-          .as(Seq("doc_a", "doc_b", "__dot", "__na", "__nb")))
-      .withColumn("sim",
-        round(col("__dot") / (col("__na") * col("__nb")), 4).cast("decimal(7,4)"))
-      .where(col("sim") >= threshold)
-      .select(col(blockCol), col("doc_a"), col("doc_b"), col("sim"))
   }
 }

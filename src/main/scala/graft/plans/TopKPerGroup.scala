@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -15,8 +15,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 /**
  * Whole-operator custom plan (SURVEY §4.3 / builder brief preference (c)):
  * top-k rows per group as a first-class operator — LogicalPlan node +
- * planner Strategy + physical exec, registered via extraStrategies (or
- * SparkSessionExtensions through [[GraftExtensions]]).
+ * planner Strategy + physical exec; [[TopKPerGroup.apply]] adds the
+ * strategy to the session's extraStrategies.
  *
  * Why it exists: the Window(row_number) ≤ k formulation must fully SORT
  * every group (O(n log n) per group, full materialization before the
@@ -104,22 +104,4 @@ case class TopKPerGroupExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerGroupExec =
     copy(child = newChild)
-}
-
-/** spark.sql.extensions entry point: registers the strategy + optimizer
-  * rule at session build time (the runtime GraftOptimizations.install path
-  * covers pre-built sessions like the driver's). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    e.injectOptimizerRule(_ => RewriteWindowTopK)
-    // the FULL SQL-function surface, from the one shared registry — the
-    // extensions path and GraftFunctions.registerAll cannot diverge
-    graft.functions.GraftFunctions.sqlBuilders.foreach { case (name, builder) =>
-      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "graft.functions.GraftFunctions", name),
-        builder))
-    }
-  }
 }

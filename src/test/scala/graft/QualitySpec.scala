@@ -248,40 +248,6 @@ class QualitySpec extends SparkTestBase {
     assert(flagged === Set(99L))
   }
 
-  test("approx percentile mode tracks exact closely (nearest-rank semantics)") {
-    // the documented 100 TB path. approx_percentile returns an ACTUAL
-    // data value (nearest rank) where exact percentile interpolates, so
-    // the two modes differ by at most one rank even when the sketch is
-    // error-free — assert the monitoring-relevant closeness, not bit
-    // equality: clip counts within ±2 per tail, winsorized means within
-    // 1%, and the flagged outlier sets nearly identical.
-    val exact = SparkEntry.queries("q134_winsorize")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r).toMap
-    val approx = graft.operators.Quality
-      .winsorize(graft.engine.Tables.table(spark, sfDir, "events"),
-        "event_type", "value", 0.05, 0.95, approx = true)
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(exact.keySet === approx.keySet)
-    exact.foreach { case (k, e) =>
-      val a = approx(k)
-      assert(math.abs(e.getAs[Long]("n_low") - a.getAs[Long]("n_low")) <= 2, k)
-      assert(math.abs(e.getAs[Long]("n_high") - a.getAs[Long]("n_high")) <= 2, k)
-      val (em, am) = (e.getAs[Double]("mean_winsor"), a.getAs[Double]("mean_winsor"))
-      assert(math.abs(em - am) / em < 0.01, s"$k: $em vs $am")
-    }
-    val exactIqr = graft.operators.Quality
-      .iqrOutliers(graft.engine.Tables.table(spark, sfDir, "events"),
-        "event_type", "value")
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    val approxIqr = graft.operators.Quality
-      .iqrOutliers(graft.engine.Tables.table(spark, sfDir, "events"),
-        "event_type", "value", approx = true)
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    val sym = (exactIqr diff approxIqr) ++ (approxIqr diff exactIqr)
-    assert(sym.size <= math.max(2, exactIqr.size / 10),
-      s"outlier sets diverged by ${sym.size} of ${exactIqr.size}")
-  }
-
   test("Quality.psi matches a driver-side reference and orders drift sensibly") {
     // PSI is library-only (ln is engine-internal — q130's TVD carries the
     // oracle); check it against an independent reference computation and

@@ -272,15 +272,12 @@ class SchemaDriftSpec extends SparkTestBase {
   }
 
   test("directory tables re-infer schema after an in-place part-file rewrite") {
-    // r14 (ADVICE r13 #2): the r13 directory fix bypassed the RELATION
-    // memo but still resolved the schema through a cache keyed on the
-    // DIRECTORY's (mtime, length, trailerToken=0) — a part-file rewrite
-    // that changes the schema without moving the directory's metadata
-    // would serve a STALE schema into spark.read.schema(...), silently
-    // misreading the new files. The listing digest (entry names + mtimes
-    // + lengths) now re-keys the schema cache. The pin forces the worst
-    // case: overwrite with a different schema, then restore the
-    // directory's original mtime so (path, mtime, length) collides.
+    // A part-file rewrite can change a directory's schema without moving
+    // the directory's (mtime, length). A directory is read with Spark's
+    // own schema inference on every call, so the new schema must show on
+    // the next read. The pin forces the worst case: overwrite with a
+    // different schema, then restore the directory's original mtime so
+    // (path, mtime, length) collides.
     val dir = fixtureDir()
     val tablePath = dir.resolve("events.parquet")
     baseEvents.repartition(2).write.parquet(tablePath.toString)
@@ -293,8 +290,8 @@ class SchemaDriftSpec extends SparkTestBase {
     assert(dirFile.setLastModified(m0), "could not force the mtime collision")
     val after = Tables.table(spark, dir.toString, "events")
     assert(after.columns.contains("extra_col"),
-      "stale cached schema served for a schema-rewritten directory — the " +
-        "listing digest failed to re-key the schema cache")
+      "stale schema served for a schema-rewritten directory: a directory " +
+        "read must infer its schema on every call")
     assert(after.count() === 240L)
   }
 

@@ -447,29 +447,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(rows.map(_.getDouble(2)).sorted.toSeq == Seq(3.0, 6.0))
   }
 
-  test("blockedPairs equals brute-force pairwise cosine inside each block") {
-    val emb = graft.engine.Tables.table(spark, sfDir, "embeddings")
-      .where(col("vec_id") < 60)
-      .withColumn("blk", (col("vec_id") % 3).cast("string"))
-    val out = graft.operators.Similarity
-      .blockedPairs(emb, "vec_id", "embedding", "blk", threshold = 0.0)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDecimal(3).toPlainString)).toSet
-    // brute force: same cosine column over an explicit small cross join
-    import graft.functions.GraftFunctions
-    val v = emb.select(col("blk"), col("vec_id"),
-      col("embedding").cast("array<double>").as("e"))
-    val brute = v.as("a").join(v.as("b"),
-        col("a.blk") === col("b.blk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.blk"), col("a.vec_id"), col("b.vec_id"),
-        GraftFunctions.cosineSim(col("a.e"), col("b.e")).as("sim"))
-      .where(col("sim") >= 0.0)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDecimal(3).toPlainString)).toSet
-    assert(out.nonEmpty && out == brute,
-      s"blockedPairs diverges: onlyOut=${(out -- brute).take(3)} onlyBrute=${(brute -- out).take(3)}")
-  }
-
   test("q47 simhash candidate pairs are well-formed") {
     val rows = SparkEntry.queries("q47_dedup_simhash")(spark, sfDir).collect()
     assert(rows.nonEmpty)

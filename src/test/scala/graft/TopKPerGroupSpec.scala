@@ -15,9 +15,18 @@ class TopKPerGroupSpec extends SparkTestBase {
   }
 
   private def assertSame(df: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+    // The reference must stay a real window plan, or the operator is
+    // compared with itself. Spark's own InferWindowGroupLimit adds a
+    // WindowGroupLimit below it unless the input cannot exceed k rows.
+    val reference = windowTopK(df, k)
+    val plan = reference.queryExecution.optimizedPlan.toString
+    assert(plan.contains("Window ["), s"k=$k reference is no window plan:\n$plan")
+    assert(!plan.contains("TopKPerGroup"), s"k=$k reference planned as the operator:\n$plan")
+    if (df.queryExecution.optimizedPlan.maxRows.forall(_ > k))
+      assert(plan.contains("WindowGroupLimit"), s"k=$k reference has no group limit:\n$plan")
     val custom = TopKPerGroup(df, Seq("g"), Seq("v" -> false, "id" -> true), k)
       .orderBy("g", "id").collect().map(_.toSeq).toSeq
-    val window = windowTopK(df, k).orderBy("g", "id").collect().map(_.toSeq).toSeq
+    val window = reference.orderBy("g", "id").collect().map(_.toSeq).toSeq
     assert(custom == window)
   }
 
