@@ -401,9 +401,9 @@ object SimilarityOps {
   // The clustering step production dedup needs on top of candidate pairs:
   // banded-MinHash candidates (q48's keys) become an edge list, connected
   // components find the transitive dedup groups, and each group's min id is
-  // the survivor (q30's rule). Spark side: iterative min-label propagation
-  // (Dedup.connectedComponents, one edge shuffle per round, converged in a
-  // few rounds — near-dup clusters have tiny diameter). Oracle: recursive
+  // the survivor (q30's rule). Spark side: Dedup.connectedComponents, which
+  // picks its path by edge count (the near-dup graph is 355 edges at sf0.1,
+  // so a driver-side union-find labels it in one action). Oracle: recursive
   // CTE transitive closure over the identical (engine-portable) edge list.
   private val q75 = QueryDef(
     "q75_dedup_components",
@@ -443,7 +443,7 @@ object SimilarityOps {
         && col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
     // candidate-pair edges are corpus-fraction-sized: right-size the
-    // iterative stage's shuffles instead of inheriting the scan's count
+    // CC shuffles instead of inheriting the scan's count
     graft.operators.Dedup.connectedComponents(pairs, "doc_a", "doc_b",
         shufflePartitions = Some(8))
       .groupBy(col("label").as("component"))
@@ -997,14 +997,12 @@ object SimilarityOps {
     // gap widens with row count. Bit-identical to the oracle's row-level
     // recursive closure.
     val (g, edges) = entityAtomGraph(s, dir)
-    // Bounded CC (r11): the atom graph is vocabulary-derived (distinct
-    // names × blocks — 64 names / ~11k atom edges at sf0.1, growing with
-    // the VOCABULARY, not the row count), so the edge set collects under
-    // the default 64k guard and union-find labels it in one action; past
-    // the guard the distributed CC runs unchanged on the already-
-    // materialized edge cache (q75 exercises the distributed operator on
-    // the document corpus every round).
-    val comp = graft.operators.Dedup.connectedComponentsBounded(
+    // CC (r11): the atom graph is vocabulary-derived (distinct names ×
+    // blocks — 64 names / ~11k atom edges at sf0.1, growing with the
+    // VOCABULARY, not the row count), so the edge set collects under the
+    // default 64k guard and union-find labels it in one action; past the
+    // guard label propagation runs on the already-materialized edge cache.
+    val comp = graft.operators.Dedup.connectedComponents(
       edges, "u", "v", shufflePartitions = Some(2))
     // groups with a fuzzy neighbor take their CC label; edge-less groups
     // are entities only if they hold ≥ 2 records (the row formulation's

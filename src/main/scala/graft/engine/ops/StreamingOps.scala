@@ -37,16 +37,24 @@ object StreamingOps {
     * 2.2→2.0 s; state at sf0.1 is a few thousand rows). */
   private val StatePartitions = 2
 
-  /** Run `body` with [[StatePartitions]] shuffle partitions. */
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
+  /** Run `stream` to completion with one `AvailableNow` trigger, handing
+    * every micro-batch to `perBatch`, with the shuffle partitions held at
+    * [[StatePartitions]] for the whole run. */
+  private def runAvailableNow(s: SparkSession, stream: DataFrame, outputMode: String)(
+      perBatch: DataFrame => Unit): Unit = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    try stream.writeStream
+      .outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, _: Long) => perBatch(batch) }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Drain `stream` into a parquet sink with one `AvailableNow` run under
-    * [[withStatePartitions]], then read the sink back. Every micro-batch
-    * is written through foreachBatch: appended in append/update mode,
+  /** Drain `stream` into a parquet sink with [[runAvailableNow]], then read
+    * the sink back. Every micro-batch is appended in append/update mode and
     * overwritten in complete mode (which re-emits the whole result each
     * batch).
     *
@@ -63,16 +71,7 @@ object StreamingOps {
                              outputMode: String): DataFrame = {
     val target = java.nio.file.Files.createTempDirectory(s"${key}_sink").toString + "/out"
     val writeMode = if (outputMode == "complete") "overwrite" else "append"
-    withStatePartitions(s) {
-      stream.writeStream
-        .outputMode(outputMode)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(writeMode).parquet(target)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    }
+    runAvailableNow(s, stream, outputMode)(_.write.mode(writeMode).parquet(target))
     s.read.schema(stream.schema).parquet(target)
   }
 
@@ -309,26 +308,17 @@ object StreamingOps {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), min(col("profile_n")).as("profile_n"))
     val target = java.nio.file.Files.createTempDirectory("q73_sink").toString + "/out"
-    withStatePartitions(s) {
-      val query = enriched.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Here the empty-batch guard must stay (an empty upsert would
-          // still rewrite every touched bucket), so persist the batch to
-          // keep the guard + upsert at ONE plan execution (r08; inside
-          // foreachBatch each action otherwise re-runs the micro-batch
-          // plan, state reads included).
-          batch.persist()
-          try {
-            if (!batch.isEmpty)
-              graft.operators.MergeUpsert.upsertBatch(
-                batch.sparkSession, target, batch, Seq("user_id"), numBuckets = 16)
-          } finally batch.unpersist()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    runAvailableNow(s, enriched, "update") { batch =>
+      // Here the empty-batch guard must stay (an empty upsert would still
+      // rewrite every touched bucket), so persist the batch to keep the
+      // guard + upsert at ONE plan execution (r08; inside foreachBatch each
+      // action otherwise re-runs the micro-batch plan, state reads included).
+      batch.persist()
+      try {
+        if (!batch.isEmpty)
+          graft.operators.MergeUpsert.upsertBatch(
+            batch.sparkSession, target, batch, Seq("user_id"), numBuckets = 16)
+      } finally batch.unpersist()
     }
     graft.operators.MergeUpsert.snapshot(s, target).orderBy("user_id")
   }

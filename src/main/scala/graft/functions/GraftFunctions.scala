@@ -20,11 +20,24 @@ import graft.engine.expr.{ArrayEqCount, ArrayPairs, BigramGenerator,
  */
 object GraftFunctions {
 
-  private def litLong(e: Expression, what: String): Long = e.eval() match {
-    case n: Number => n.longValue()
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
+  /** The value of literal argument `arg` of SQL function `fn`: `e` must be
+    * foldable and evaluate to a value `read` accepts, else an
+    * IllegalArgumentException names the function and the argument (an
+    * `eval()` on a column reference would throw an opaque internal error).
+    * The one place a SQL builder evaluates an argument. */
+  private def literal[T](fn: String, arg: String, kind: String, e: Expression)(
+      read: PartialFunction[Any, T]): T = {
+    def bad(got: Any) =
+      new IllegalArgumentException(s"$fn: $arg must be $kind literal, got $got")
+    if (!e.foldable) throw bad("a non-literal expression")
+    read.applyOrElse(e.eval(), (v: Any) => throw bad(v))
   }
+
+  private def intLit(fn: String, arg: String, e: Expression): Long =
+    literal(fn, arg, "an integer", e) {
+      case n: java.lang.Integer => n.longValue
+      case n: java.lang.Long => n.longValue
+    }
 
   /** Name → builder for every graft SQL function; [[registerAll]] is the
     * one place that registers them. */
@@ -37,34 +50,26 @@ object GraftFunctions {
       case _ => throw new IllegalArgumentException("bigrams(tokens)") },
     "rolling_fingerprint" -> {
       case Seq(e) => RollingFingerprint(e, -1)
-      case Seq(e, lim) => RollingFingerprint(e, lim.eval().asInstanceOf[Number].intValue())
+      case Seq(e, lim) =>
+        RollingFingerprint(e, intLit("rolling_fingerprint", "limit", lim).toInt)
       case _ => throw new IllegalArgumentException("rolling_fingerprint(text[, limit])") },
     "json_int_key" -> {
-      case Seq(e, k) =>
-        // foldable guard (r11 review finding): eval() on a non-literal
-        // (e.g. a column reference) throws an opaque internal error —
-        // raise the intended argument error instead.
-        if (!k.foldable) throw new IllegalArgumentException(
-          "json_int_key key must be a string literal, got a non-literal expression")
-        JsonIntKey(e, k.eval() match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-          case s: String => s
-          case other => throw new IllegalArgumentException(
-            s"json_int_key key must be a string literal, got $other")
-        })
+      case Seq(e, k) => JsonIntKey(e, literal("json_int_key", "key", "a string", k) {
+        case s: org.apache.spark.unsafe.types.UTF8String => s.toString })
       case _ => throw new IllegalArgumentException("json_int_key(json, key)") },
     "hashed_shingles" -> {
       case Seq(e) => HashedShingles(e)
       case _ => throw new IllegalArgumentException("hashed_shingles(tokens)") },
     "lcg_min" -> {
-      case Seq(e, a, c) => LcgMin(e, litLong(a, "a"), litLong(c, "c"))
+      case Seq(e, a, c) => LcgMin(e, intLit("lcg_min", "a", a), intLit("lcg_min", "c", c))
       case _ => throw new IllegalArgumentException("lcg_min(hashes, a, c)") },
     "window_hashes" -> {
-      case Seq(e, k) => WindowHashes(e, litLong(k, "k").toInt)
+      case Seq(e, k) => WindowHashes(e, intLit("window_hashes", "k", k).toInt)
       case _ => throw new IllegalArgumentException("window_hashes(tokens, k)") },
     "simhash_pack" -> {
       case Seq(e) => SimHashPack(e, portable = false)
-      case Seq(e, p) => SimHashPack(e, p.eval() == true)
+      case Seq(e, p) => SimHashPack(e, literal("simhash_pack", "portable", "a boolean", p) {
+        case b: java.lang.Boolean => b.booleanValue })
       case _ => throw new IllegalArgumentException("simhash_pack(tokens[, portable])") },
     "bucket_pair_dots" -> {
       case Seq(e) => BucketPairDots(e)
@@ -78,12 +83,12 @@ object GraftFunctions {
       case _ => throw new IllegalArgumentException(
         "array_eq_count(array<bigint>, array<bigint>)") },
     "sum128" -> {
-      case Seq(e, s) => Sum128(e, litLong(s, "resultScale").toInt,
+      case Seq(e, s) => Sum128(e, intLit("sum128", "resultScale", s).toInt,
         square = false).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "sum128(unscaled_bigint, resultScale)") },
     "square_sum128" -> {
-      case Seq(e, s) => Sum128(e, litLong(s, "resultScale").toInt,
+      case Seq(e, s) => Sum128(e, intLit("square_sum128", "resultScale", s).toInt,
         square = true).toAggregateExpression()
       case _ => throw new IllegalArgumentException(
         "square_sum128(unscaled_bigint, resultScale)") })

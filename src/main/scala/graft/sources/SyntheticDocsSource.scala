@@ -34,7 +34,6 @@ class SyntheticDocsSource extends TableProvider
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     SyntheticDocsSource.schemaFor(
-      options.getBoolean("withText", false),
       options.getBoolean("withMedia", false),
       options.getBoolean("withEmbedding", false))
 
@@ -43,7 +42,6 @@ class SyntheticDocsSource extends TableProvider
     new SyntheticDocsTable(
       properties.getOrDefault("rows", "1000").toLong,
       properties.getOrDefault("partitions", "4").toInt,
-      properties.getOrDefault("withText", "false").toBoolean,
       properties.getOrDefault("withMedia", "false").toBoolean,
       properties.getOrDefault("withEmbedding", "false").toBoolean)
 }
@@ -55,15 +53,9 @@ object SyntheticDocsSource {
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("checksum", LongType, nullable = false)))
 
-  /** Schema when `withText=true`: adds a generated document body. */
-  val schemaWithText: StructType =
-    schema.add(StructField("text", StringType, nullable = false))
-
-  /** Option-dependent schema: [+text] [+png, frames media payloads]
-    * [+embedding]. */
-  def schemaFor(withText: Boolean, withMedia: Boolean,
-      withEmbedding: Boolean = false): StructType = {
-    var s = if (withText) schemaWithText else schema
+  /** Option-dependent schema: [+png, frames media payloads] [+embedding]. */
+  def schemaFor(withMedia: Boolean, withEmbedding: Boolean = false): StructType = {
+    var s = schema
     if (withMedia) {
       s = s.add(StructField("png", BinaryType, nullable = false))
       s = s.add(StructField("frames", BinaryType, nullable = false))
@@ -83,40 +75,6 @@ object SyntheticDocsSource {
     val nTokens = (id * 37 % 91 + 10).toInt
     val checksum = (id * 1315423911L) % 1000000007L
     (id, lang, nTokens, checksum)
-  }
-
-  /** Deterministic document body for the dedup stress path (`withText`).
-    *
-    * 30% of docs form planted DUP TRIADS: ids 10k / 10k+1 / 10k+2 share a
-    * token-stream seed (and the seed's token count, so the streams align).
-    * 10k+1 appends one extra unique token (a NEAR-dup); 10k+2 is an EXACT
-    * copy of 10k (exercises signature dedup). The other 70% are unique
-    * streams. Cluster sizes are thus bounded (≤3) at every scale while the
-    * dup FRACTION stays constant — the distribution blocked dedup must
-    * stay linear on.
-    * Token vocabulary is 5000 words over an LCG stream, shaped
-    * `<letter><number>` so tokens vary in FIRST CHAR (26) and LENGTH (2-5)
-    * — the portable token code (first-char ascii × 31 + length) must
-    * discriminate ~100 classes, giving a ~10⁶ 3-gram shingle space; a
-    * single-letter vocab would collapse every doc into one block.
-    * Streaming generation per partition; nothing driver-side.
-    */
-  def textFor(id: Long): String = {
-    val paired = id % 10 <= 2
-    val seedBase = if (paired) id / 10 * 10 else id
-    val nTokens = (seedBase * 37 % 91 + 10).toInt
-    var h = seedBase * 2654435761L + 1000003L
-    val sb = new java.lang.StringBuilder(nTokens * 6)
-    var j = 0
-    while (j < nTokens) {
-      h = h * 6364136223846793005L + 1442695040888963407L
-      val w = java.lang.Long.remainderUnsigned(h >>> 33, 5000L)
-      if (j > 0) sb.append(' ')
-      sb.append(('a' + w % 26).toChar).append(w / 26)
-      j += 1
-    }
-    if (id % 10 == 1) sb.append(" u").append(id)
-    sb.toString
   }
 
   // ---- Media payloads (`withMedia=true`): GENUINE PNGs, in-JDK ----------
@@ -255,11 +213,11 @@ object SyntheticDocsSource {
 }
 
 private class SyntheticDocsTable(rows: Long, partitions: Int,
-    withText: Boolean, withMedia: Boolean, withEmbedding: Boolean = false)
+    withMedia: Boolean, withEmbedding: Boolean = false)
     extends Table with SupportsRead {
   override def name(): String = s"synthetic_docs($rows)"
   override def schema(): StructType =
-    SyntheticDocsSource.schemaFor(withText, withMedia, withEmbedding)
+    SyntheticDocsSource.schemaFor(withMedia, withEmbedding)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   // Column pruning matters MORE for a generator than a file source: an
@@ -305,7 +263,6 @@ private case class DocsReaderFactory(fields: Seq[String])
         case "lang"     => id => UTF8String.fromString(base(id)._2)
         case "n_tokens" => id => base(id)._3
         case "checksum" => id => base(id)._4
-        case "text"     => id => UTF8String.fromString(SyntheticDocsSource.textFor(id))
         case "png"      => id => SyntheticDocsSource.pngFor(id)
         case "frames"   => id => SyntheticDocsSource.framesFor(id)
         case "wav"      => id => SyntheticDocsSource.wavFor(id)

@@ -64,7 +64,7 @@ class CcPropSpec extends SparkTestBase {
       val pairs = edges.toDF("doc_a", "doc_b")
       // alternate even/odd budgets so the trailing single-round path runs
       val maxIter = if (i % 2 == 0) 40 else 41
-      val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter)
+      val got = Dedup.propagateLabels(pairs, "doc_a", "doc_b", maxIter)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == unionFind(edges),
         s"seed $i (maxIter=$maxIter): CC diverged from union-find on $edges")
@@ -77,7 +77,7 @@ class CcPropSpec extends SparkTestBase {
     // round 5). The r07 loop stopped at rounds=4 (4+2 > 5) and threw —
     // the exact silent-drop ADVICE r07 flagged.
     val chain = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 5)
+    val got = Dedup.propagateLabels(chain, "doc_a", "doc_b", maxIter = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L))
   }
@@ -86,7 +86,7 @@ class CcPropSpec extends SparkTestBase {
     // Single edge: the seeded labels are already the fixpoint, so one
     // verification round detects stability. r07 threw unconditionally.
     val one = Seq((7L, 9L)).toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(one, "doc_a", "doc_b", maxIter = 1)
+    val got = Dedup.propagateLabels(one, "doc_a", "doc_b", maxIter = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(7L -> 7L, 9L -> 7L))
   }
@@ -94,7 +94,7 @@ class CcPropSpec extends SparkTestBase {
   test("maxIter=1 still throws when one round cannot converge") {
     val chain = (0L until 6L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 1)
+      Dedup.propagateLabels(chain, "doc_a", "doc_b", maxIter = 1)
     }
     assert(e.getMessage.contains("converge"))
   }
@@ -113,7 +113,7 @@ class CcPropSpec extends SparkTestBase {
       // guard 1 would NOT force it on a seed whose normalized edge set
       // collapses to a single pair)
       Seq(4096, 0).foreach { guard =>
-        val got = Dedup.connectedComponentsBounded(pairs, "doc_a", "doc_b",
+        val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
             driverMaxEdges = guard)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == oracle,
@@ -126,30 +126,32 @@ class CcPropSpec extends SparkTestBase {
     // r12, ADVICE r11 #1: the normalization (a =!= b) drops self-loops
     // BEFORE the guard, and the distributed fallback consumes the same
     // filtered frame — so node 7 (self-loop only) must be absent from the
-    // output on BOTH paths, and the two paths must be identical. (Plain
-    // connectedComponents labels a self-loop node as itself; the contract
-    // difference is documented on connectedComponentsBounded.)
+    // output on BOTH paths, and the two paths must be identical. (Bare
+    // propagateLabels labels a self-loop node as itself; the note is on
+    // propagateLabels.)
     val pairs = Seq((7L, 7L), (1L, 2L), (2L, 3L), (9L, 9L), (9L, 4L))
       .toDF("doc_a", "doc_b")
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 4L, 4L -> 4L)
     Seq(4096, 0).foreach { guard =>
-      val got = Dedup.connectedComponentsBounded(pairs, "doc_a", "doc_b",
+      val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
           driverMaxEdges = guard)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expect, s"guard=$guard: self-loop handling diverged: $got")
     }
   }
 
-  test("q149 routes through the bounded-CC driver fast path") {
+  test("q75 and q149 route through the CC driver fast path") {
     // Regression pin (r12, VERDICT r11 #5): the r11 q149 win (3.3 → 1.7 s)
     // is the union-find fast path; a refactor could silently fall back to
-    // the distributed ladder while staying hash-correct. The atom graph at
-    // sf0.001 is far under the 64k guard, so exactly one driver-path hit
-    // must be recorded by the run.
-    val before = Dedup.boundedDriverPathHits.get()
-    SparkEntry.queries("q149_entity_resolution")(spark, sfDir).count()
-    assert(Dedup.boundedDriverPathHits.get() == before + 1,
-      "q149 did not take the connectedComponentsBounded driver fast path")
+    // the distributed ladder while staying hash-correct. q75's near-dup
+    // graph and q149's atom graph at sf0.001 are far under the 64k guard,
+    // so each run must record exactly one driver-path hit.
+    Seq("q75_dedup_components", "q149_entity_resolution").foreach { key =>
+      val before = Dedup.boundedDriverPathHits.get()
+      SparkEntry.queries(key)(spark, sfDir).count()
+      assert(Dedup.boundedDriverPathHits.get() == before + 1,
+        s"$key did not take the connectedComponents driver fast path")
+    }
   }
 
   test("bounded CC driver path handles duplicate and reversed pairs") {
@@ -158,7 +160,7 @@ class CcPropSpec extends SparkTestBase {
     // the labels.
     val pairs = Seq((5L, 3L), (3L, 5L), (5L, 3L), (8L, 9L))
       .toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponentsBounded(pairs, "doc_a", "doc_b",
+    val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b",
         driverMaxEdges = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(5L -> 3L, 3L -> 3L, 8L -> 8L, 9L -> 8L))

@@ -103,6 +103,26 @@ class GraftFunctionsSpec extends SparkTestBase {
     assert(eq == 2)
   }
 
+  test("SQL builders reject a column where a literal argument belongs") {
+    GraftFunctions.registerAll(spark)
+    import spark.implicits._
+    Seq(("a b c", 2, 6L, true)).toDF("t", "n", "x", "p").createOrReplaceTempView("gf_lit")
+    Seq(
+      "rolling_fingerprint" -> "rolling_fingerprint(t, n)",
+      "window_hashes" -> "window_hashes(split(t, ' '), n)",
+      "lcg_min" -> "lcg_min(hashed_shingles(split(t, ' ')), n, 11)",
+      "lcg_min" -> "lcg_min(hashed_shingles(split(t, ' ')), 37, n)",
+      "sum128" -> "sum128(x, n)",
+      "square_sum128" -> "square_sum128(x, n)",
+      "simhash_pack" -> "simhash_pack(split(t, ' '), p)",
+      "json_int_key" -> "json_int_key(t, t)").foreach { case (fn, call) =>
+      val e = intercept[IllegalArgumentException] {
+        spark.sql(s"SELECT $call FROM gf_lit").collect()
+      }
+      assert(e.getMessage.contains(fn), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("native RollingFingerprint equals the lambda formulation everywhere") {
     import spark.implicits._
     // Boundary fixtures: empty string, single token, leading/trailing/double

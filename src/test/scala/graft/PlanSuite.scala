@@ -571,8 +571,9 @@ class PlanSuite extends SparkTestBase {
     // Every member's plan must read an InMemoryTableScan — a member that
     // rebuilds its own copy silently re-runs the full pipeline per query.
     // q75 is absent: its connected-components result is eager (the final
-    // plan collapses to Scan ExistingRDD), so the shingle-cache read
-    // happens at build time and is not visible in its explain output.
+    // plan collapses to a LocalTableScan of the driver-side labels), so the
+    // shingle-cache read happens at build time and is not visible in its
+    // explain output.
     Seq("q34_sim_threshold_count", "q49_dedup_embed", "q111_hard_negatives",
         "q128_contrastive_positives", "q48_dedup_ngram_jaccard",
         "q124_jaccard_postings",

@@ -165,7 +165,7 @@ class SimilaritySpec extends SparkTestBase {
     }
     val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
       .map(n => n -> find(n)).toMap
-    val got = graft.operators.Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    val got = graft.operators.Dedup.propagateLabels(pairs, "doc_a", "doc_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected, "label propagation diverged from union-find")
   }
@@ -219,7 +219,7 @@ class SimilaritySpec extends SparkTestBase {
     // does not accumulate joins across rounds.
     import spark.implicits._
     val chain = (0L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = graft.operators.Dedup.connectedComponents(
+    val labels = graft.operators.Dedup.propagateLabels(
       chain, "doc_a", "doc_b", maxIter = 15)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (0L to 10L).map(_ -> 0L).toMap)
@@ -231,7 +231,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(joins <= 2, s"lineage not truncated: $joins joins still in the plan")
     // diameter > maxIter must throw, not return partial labels
     val tooDeep = intercept[IllegalStateException] {
-      graft.operators.Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 5)
+      graft.operators.Dedup.propagateLabels(chain, "doc_a", "doc_b", maxIter = 5)
     }
     assert(tooDeep.getMessage.contains("converge"))
   }

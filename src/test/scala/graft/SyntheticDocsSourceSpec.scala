@@ -28,29 +28,6 @@ class SyntheticDocsSourceSpec extends SparkTestBase {
     assert(row.getLong(3) == checksum)
   }
 
-  test("withText plants dup triads and a code-discriminating vocabulary") {
-    import graft.sources.SyntheticDocsSource.textFor
-    // triad contract (the dedup-stress fixture): 10k+2 EXACT copy of 10k,
-    // 10k+1 = 10k plus one unique trailing token, others unique streams
-    for (base <- Seq(0L, 10L, 1230L)) {
-      assert(textFor(base + 2) == textFor(base))
-      assert(textFor(base + 1) == textFor(base) + s" u${base + 1}")
-    }
-    assert(textFor(3L) != textFor(13L))
-    // the portable token code (first char × 31 + length) must see a rich
-    // vocabulary — a collapsed one turns every doc into one dedup block
-    // (measured failure mode: single-letter vocab → block of ALL docs)
-    val codes = (0L until 200L).flatMap(id => textFor(id).split(" "))
-      .map(t => t.head.toInt * 31 + t.length).distinct
-    assert(codes.size >= 50, s"token-code classes collapsed: ${codes.size}")
-    // DSv2 read surface returns the text column
-    val df = spark.read.format("graft-docs")
-      .option("rows", 30).option("partitions", 3).option("withText", "true").load()
-    assert(df.columns.contains("text"))
-    val r = df.where("doc_id = 12").collect().head
-    assert(r.getString(r.fieldIndex("text")) == textFor(12L))
-  }
-
   test("withMedia payloads are genuine PNGs whose pixels match the contract") {
     import graft.sources.SyntheticDocsSource._
     val df = spark.read.format("graft-docs")
